@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_pipeline2_0_spark.plans.registry import ALL_QUERIES
 from etl_pipeline2_0_spark.session import get_spark
 from etl_pipeline2_0_spark.sources.tables import TABLES, load_table
+from etl_pipeline2_0_spark.streaming.windows import DEFAULT_STATE_PARTITIONS
 
 # Headline set: the flagship scan-agg, the join pyramid, windows/sessionize,
 # and one of each scale-extension family (dedup, similarity, text, pipeline).
@@ -855,7 +856,10 @@ def main() -> None:
             # rows run under this many state partitions (library default
             # / env override), so cross-round records are comparable.
             "stream_state_partitions": int(
-                os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8)
+                os.environ.get(
+                    "SPARK_GRAFT_STREAM_STATE_PARTITIONS",
+                    DEFAULT_STATE_PARTITIONS,
+                )
             ),
         }
     )

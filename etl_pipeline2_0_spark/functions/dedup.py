@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline2_0_spark.functions import sketches
-from etl_pipeline2_0_spark.operators.partitioning import ensure_min_parallelism
+from etl_pipeline2_0_spark.operators.partitioning import (
+    ensure_min_parallelism,
+    reuse,
+)
 
 # ---------------------------------------------------------------- exact ----
 
@@ -108,7 +111,6 @@ def jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    checkpoint: bool = True,
     freq_source: str = "exact",
     cms_depth: int = 4,
     cms_width: int = 65536,
@@ -154,14 +156,10 @@ def jaccard_pairs(
     )
     # The (id, hash) shingle index feeds three consumers (both self-join
     # sides + the size aggregate); without a barrier the tokenizer runs
-    # three times per action.  A lazy localCheckpoint materializes the
-    # compact 16-byte rows once — the inline version of the "write the
-    # shingle index, probe it" production shape the incremental variant
-    # documents.  No job at construction; schema-only analysis stays free.
-    # (``checkpoint=False`` keeps the full lineage visible — the plan-shape
-    # guards use it to assert pushdown/join shape on the logical form.)
-    if checkpoint:
-        shingled = shingled.localCheckpoint(eager=False)
+    # three times per action.  The barrier keeps the compact 16-byte rows
+    # once — the inline version of the "write the shingle index, probe
+    # it" production shape the incremental variant documents.
+    shingled = reuse(shingled)
     if max_doc_freq is not None:
         if freq_source == "cms":
             key = F.col("shingle_h").cast("string")
@@ -218,7 +216,6 @@ def jaccard_pairs_incremental(
     k: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Incremental dedup: exact n-gram Jaccard of every NEW document against
     the EXISTING corpus — the standard production shape (each crawl batch is
@@ -250,12 +247,9 @@ def jaccard_pairs_incremental(
     # Tokenize each side exactly once: both shingle frames feed 2-3
     # consumers (doc-freq filter, size aggregate, the probe join), so
     # without a barrier the explode+hash re-runs per consumer.  Same
-    # shingle-index materialization as jaccard_pairs, lazily.
-    new_sh = _shingles(new_df, "new_id")
-    corp_sh = _shingles(corpus_df, "corpus_id")
-    if checkpoint:
-        new_sh = new_sh.localCheckpoint(eager=False)
-        corp_sh = corp_sh.localCheckpoint(eager=False)
+    # shingle-index materialization as jaccard_pairs.
+    new_sh = reuse(_shingles(new_df, "new_id"))
+    corp_sh = reuse(_shingles(corpus_df, "corpus_id"))
     if max_doc_freq is not None:
         hot = (
             corp_sh.groupBy("shingle_h")
@@ -459,9 +453,9 @@ def lsh_candidate_pairs(
         if bucket_freq_source == "cms":
             key = F.concat_ws(":", F.col("band").cast("string"),
                               F.col("bucket").cast("string"))
-            sk = sketches.cms_sketch(
+            sk = reuse(sketches.cms_sketch(  # feeds the probe AND auto-salt
                 banded.select(key.alias("item")), "item", cms_depth, cms_width
-            ).localCheckpoint(eager=False)  # feeds the probe AND auto-salt
+            ))
             banded = (
                 sketches.cms_estimate_map_side(
                     banded, key, sk, cms_depth, cms_width, out_col="__est"
@@ -534,7 +528,6 @@ def minhash_near_duplicates(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int | None = 1000,
-    checkpoint: bool = True,
     portable: bool = False,
     band_salt: int | str | None = None,
     bucket_freq_source: str = "exact",
@@ -554,21 +547,15 @@ def minhash_near_duplicates(
     corpus noise floor (J≈0.01) collide with probability ~3e-3.
     """
     sigs = minhash_signatures(df, text_col, id_col, k, num_hashes, portable)
-    candidates = lsh_candidate_pairs(
-        sigs, bands, num_hashes // bands, max_bucket_size, portable,
-        band_salt, bucket_freq_source,
-    )
     # The candidate pair list feeds BOTH the verify join and the semi-join
     # prune below; Catalyst does not reuse the exchange across the two
     # consumers (column pruning diverges), so without a barrier the whole
-    # shingle→minhash→band subtree executes twice per action.  A lazy
-    # localCheckpoint materializes the tiny pair frame once on first use
-    # (no job at construction time — schema-only analysis stays free) and
-    # both consumers read the blocks; profiled ~1.9× on the full pipeline
-    # at sf0.1.  Same lifecycle as dup_components' per-round checkpoints:
-    # executor-local blocks, reclaimed by the context cleaner.
-    if checkpoint:
-        candidates = candidates.localCheckpoint(eager=False)
+    # shingle→minhash→band subtree executes twice per action (profiled
+    # ~1.9× on the full pipeline at sf0.1).
+    candidates = reuse(lsh_candidate_pairs(
+        sigs, bands, num_hashes // bands, max_bucket_size, portable,
+        band_salt, bucket_freq_source,
+    ))
     return minhash_verify_candidates(
         df, candidates, text_col, id_col, k, threshold
     )
@@ -827,7 +814,6 @@ def minhash_estimator_error(
     id_col: str = "doc_id",
     k: int = 3,
     num_hashes: int = 16,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """MinHash Jaccard-ESTIMATOR calibration table — the third leg of
     the LSH quality tripod: ``minhash_recall``/``minhash_precision``
@@ -855,7 +841,7 @@ def minhash_estimator_error(
     signatures join back on the id equi-key, matches is one
     ``zip_with`` projection — no window, no cartesian.
     """
-    base = (
+    base = reuse(
         ensure_min_parallelism(df)
         .select(
             F.col(id_col).alias("id"),
@@ -863,8 +849,6 @@ def minhash_estimator_error(
         )
         .select("id", F.xxhash64("shingle").alias("h"))
     )
-    if checkpoint:
-        base = base.localCheckpoint(eager=False)
     sizes = base.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a, b = base.alias("a"), base.alias("b")
     inter = (
@@ -934,7 +918,6 @@ def hamming_recall(
     blocks: int = 4,
     sig_bits: int = 64,
     exact_blocks: int = 16,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Measured recall + candidate-efficiency of the pigeonhole chunk
     equi-join (:func:`hamming_pairs`) against EXACT all-pairs Hamming
@@ -968,12 +951,10 @@ def hamming_recall(
     partition cross.  The candidate side is the production pigeonhole
     equi-join itself.
     """
-    base = (
+    base = reuse(
         sigs.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"))
         .where(F.col("sig").isNotNull())
     )
-    if checkpoint:
-        base = base.localCheckpoint(eager=False)
     # exact truth: salted-block all-pairs (a carries blk = hash(id)%B;
     # b explodes every blk) — a shuffle-hash equi-join on blk spreads
     # the quadratic work over exact_blocks reducers
@@ -1628,7 +1609,7 @@ def dedup_substrings(
     base = ensure_min_parallelism(docs).select(
         F.col(id_col).alias("doc_id"), w.alias("toks")
     )
-    base = base.localCheckpoint(eager=False)  # feeds grams, positions, output
+    base = reuse(base)  # feeds grams, positions, output
     n = F.size(F.col("toks"))
     # Start positions 1..n-k+1 (ANSI guard: sequence() runs BACKWARDS on an
     # empty range, so short docs take the empty-array branch).
@@ -1733,8 +1714,8 @@ def dedup_lines(
         .withColumn("line_h", F.xxhash64("line"))
     )
     # lines feeds the frequency aggregate AND the reassembly join; the
-    # lazy barrier materializes the split exactly once.
-    lines = lines.localCheckpoint(eager=False)
+    # barrier materializes the split exactly once.
+    lines = reuse(lines)
     hot = (
         lines.where("eligible")
         .groupBy("line_h")
@@ -1946,7 +1927,6 @@ def minhash_decontaminate(
     threshold: float = 0.5,
     max_bucket_size: int | None = 1000,
     portable: bool = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Cross-corpus NEAR-DUP decontamination: every (train, eval) pair
     whose shingle Jaccard ≥ ``threshold``, found by banded MinHash LSH
@@ -2005,13 +1985,12 @@ def minhash_decontaminate(
     be = _band(
         minhash_signatures(eval_df, text_col, id_col, k, num_hashes, portable)
     )
-    if checkpoint and max_bucket_size is not None:
+    if max_bucket_size is not None:
         # each banded side feeds the union-side hot count AND its own
         # anti-join — without a barrier both shingle→minhash signature
         # passes execute twice per action (r17 optimization, guide §2.4)
-        bt = bt.localCheckpoint(eager=False)
-        be = be.localCheckpoint(eager=False)
-    if max_bucket_size is not None:
+        bt = reuse(bt)
+        be = reuse(be)
         # One union-side count per (band, bucket); hot keys leave BOTH
         # sides.  The count table is (band, bucket)-keyed and small — it
         # broadcasts into two anti-joins.
@@ -2025,7 +2004,9 @@ def minhash_decontaminate(
         )
         bt = bt.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
         be = be.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    cand = (
+    # cand feeds the verify join AND both semi-join prunes — barrier it
+    # (same rationale as minhash_near_duplicates).
+    cand = reuse(
         bt.select("band", "bucket", F.col("id").alias("train_id"))
         .join(
             be.select("band", "bucket", F.col("id").alias("eval_id")),
@@ -2034,11 +2015,6 @@ def minhash_decontaminate(
         .select("eval_id", "train_id")
         .distinct()
     )
-    # cand feeds the verify join AND both semi-join prunes — barrier it
-    # (same rationale as minhash_near_duplicates; checkpoint=False only
-    # for plan-shape inspection).
-    if checkpoint:
-        cand = cand.localCheckpoint(eager=False)
 
     def _shingled(frame, ids, out_id):
         return (
@@ -2277,7 +2253,6 @@ def corpus_overlap(
     id_col: str = "doc_id",
     k: int = 3,
     max_shingle_freq: "int | None" = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Cross-source content-overlap matrix: for every pair of sources,
     how many distinct k-token shingles they share, and what fraction of
@@ -2299,7 +2274,10 @@ def corpus_overlap(
     discipline as the doc-freq caps).  Per-group vocabulary sizes ride
     a broadcast ≤|groups|-row relation.
     """
-    sh = (
+    # The distinct vocabulary feeds THREE consumers (sizes + both sides
+    # of the pair equi-join); without a barrier each consumer re-runs
+    # the corpus explode+distinct (r17 optimization, guide §2.4).
+    sh = reuse(
         df.select(
             F.col(group_col).alias("grp"),
             token_shingles(F.col(text_col), k).alias("_shs"),
@@ -2307,12 +2285,6 @@ def corpus_overlap(
         .select("grp", F.explode("_shs").alias("shingle"))
         .distinct()
     )
-    # The distinct vocabulary feeds THREE consumers (sizes + both sides
-    # of the pair equi-join); without a barrier each consumer re-runs
-    # the corpus explode+distinct (r17 optimization, guide §2.4).
-    # checkpoint=False keeps the full shape visible to plan tests.
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
     if max_shingle_freq is not None:
         hot = (
             sh.groupBy("shingle")
@@ -2381,7 +2353,7 @@ def lsh_geometry_sweep(
 
     Scale: the expensive inputs are computed ONCE — the signature table
     (one corpus pass) and the exact truth (the metric's ground-truth
-    cost, run on a sample at scale) sit behind lazy checkpoints; each
+    cost, run on a sample at scale) sit behind ``reuse`` barriers; each
     geometry re-bands the SIGNATURES (|corpus|·bands rows, no
     re-shingling) through the capped banded equi-join, and contributes
     one aggregated row.
@@ -2395,25 +2367,23 @@ def lsh_geometry_sweep(
                 f"geometry ({bands}x{rpb}) exceeds the signature budget "
                 f"num_hashes={num_hashes}"
             )
-    sigs = minhash_signatures(
+    sigs = reuse(minhash_signatures(
         df, text_col, id_col, k, num_hashes, portable=True
-    ).localCheckpoint(eager=False)
-    truth = (
+    ))
+    truth = reuse(
         jaccard_pairs(df, text_col, id_col, k, threshold)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     n_true = F.broadcast(
         truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs"))
     )
     out = None
     for bands, rpb in geometries:
-        cand = (
+        cand = reuse(
             lsh_candidate_pairs(
                 sigs, bands, rpb, max_bucket, portable=True
             )
             .select("id_a", "id_b")
-            .localCheckpoint(eager=False)
         )
         row = (
             cand.agg(
@@ -2821,7 +2791,6 @@ def cross_source_dedup_matrix(
     df,
     text_col: str = "text",
     source_col: str = "source",
-    checkpoint: bool = True,
 ):
     """Where exact duplication concentrates, source × source — the
     triage table a curation team reads before deciding WHICH feed to
@@ -2851,12 +2820,8 @@ def cross_source_dedup_matrix(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     tot = gs.groupBy("h").agg(F.sum("n").alias("n_tot"))
-    dup_gs = gs.join(tot.where(F.col("n_tot") >= 2).select("h"), "h")
-    if checkpoint:
-        # dup_gs feeds three consumers (both join sides + the diagonal);
-        # checkpoint=False exists so plan tests can pin the upstream
-        # shape (localCheckpoint prints as an opaque ExistingRDD scan)
-        dup_gs = dup_gs.localCheckpoint(eager=False)
+    # dup_gs feeds three consumers (both join sides + the diagonal)
+    dup_gs = reuse(gs.join(tot.where(F.col("n_tot") >= 2).select("h"), "h"))
     a = dup_gs.select(
         "h", F.col("src").alias("src_a"), F.col("n").alias("na")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline2_0_spark.functions.text import token_count
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 
 
 def length_bins(df: DataFrame, group_col: str = "source",
@@ -115,7 +116,7 @@ def domain_quality_rollup(
     """
     from etl_pipeline2_0_spark.functions.text import quality_score
 
-    per_dom = (
+    per_dom = reuse(  # feeds the median AND the verdict
         df.select(
             F.col(domain_col).alias("source"),
             token_count(F.col(text_col)).alias("_tc"),
@@ -131,7 +132,6 @@ def domain_quality_rollup(
                 1.0 - F.countDistinct("_h") / F.count(F.lit(1)), 6
             ).alias("dup_rate"),
         )
-        .localCheckpoint(eager=False)  # feeds the median AND the verdict
     )
     med = per_dom.agg(
         F.percentile("avg_quality", 0.5).alias("_med")
@@ -167,7 +167,7 @@ def dataset_card(
     half-boundary lesson — only the final aggregate rounds).
 
     Scale shape: ONE narrow projection of the corpus materializes behind
-    a lazy barrier, then four bounded aggregates (corpus-wide, by
+    a ``reuse`` barrier, then four bounded aggregates (corpus-wide, by
     source, by language, token percentiles) union partition-locally.
     Nothing corpus-sized shuffles except the three small grouped
     aggregates; the percentile runs as one pass.
@@ -187,14 +187,14 @@ def dataset_card(
         + F.least(stopword_ratio(t) * 4, F.lit(1.0))
         + (F.lit(1.0) - F.least(punct_ratio(t) * 4, F.lit(1.0)))
     ) / 3
-    base = df.select(
+    base = reuse(df.select(
         F.col(source_col).alias("src"),
         lang_id(t).alias("lang"),
         token_count(t).alias("tc"),
         F.length(t).alias("nc"),
         F.md5(t).alias("h"),
         quality_unrounded.alias("q"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def _row(section, metric, scope, value):
         return [F.lit(section).alias("section"), F.lit(metric).alias("metric"),
@@ -384,7 +384,6 @@ def t_closeness_audit(
     bucket_width: int = 256,
     sensitive_col: str = "lang",
     ts: "tuple[tuple[int, int], ...]" = ((1, 10), (1, 5), (3, 10), (1, 2)),
-    checkpoint: bool = True,
 ) -> DataFrame:
     """t-closeness audit (Li, Li & Venkatasubramanian 2007) — the third
     leg of the release-privacy tripod: :func:`kanon_audit` measures
@@ -422,11 +421,11 @@ def t_closeness_audit(
     distribution folds to a 1-row broadcast (map + total), classes
     re-aggregate with an order-free integer fold over the per-class
     cell list, and the t sweep explodes a |ts|-element literal.  The
-    cell frame is lazily checkpointed so the global-distribution branch
-    reads it instead of re-scanning the corpus (``checkpoint=False``
-    un-blinds plan tests).  No window, no corpus-side join, no collect.
+    cell frame sits behind a ``reuse`` barrier so the global-distribution
+    branch reads it instead of re-scanning the corpus.  No window, no
+    corpus-side join, no collect.
     """
-    cells = (
+    cells = reuse(
         df.groupBy(
             *[F.col(c) for c in quasi_cols],
             F.floor(F.col(bucket_col) / F.lit(bucket_width)).alias("_bkt"),
@@ -434,8 +433,6 @@ def t_closeness_audit(
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    if checkpoint:
-        cells = cells.localCheckpoint(eager=False)
     # Global sensitive distribution as ONE broadcast row: value->count
     # map plus the corpus total.  Bounded by |distinct sensitive values|.
     glob = (

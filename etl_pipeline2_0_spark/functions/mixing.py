@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline2_0_spark.functions.text import token_count
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 
 # 16^15: the md5-prefix sample space.  A rate r maps to the threshold
 # floor(r * 16^15); comparing the first 15 hex chars of md5(key) against
@@ -624,11 +625,10 @@ def dsir_log_weights(
 
     Output: (doc_id, n_features, log_weight).
     """
-    feats = hashed_ngram_features(df, text_col, id_col, num_buckets)
     # feats feeds the raw marginal AND the scoring join; the compact
     # (doc_id, bucket) rows materialize once instead of re-running the
-    # explode+md5 corpus pass per consumer (lazy — no job until first use).
-    feats = feats.localCheckpoint(eager=False)
+    # explode+md5 corpus pass per consumer.
+    feats = reuse(hashed_ngram_features(df, text_col, id_col, num_buckets))
     tfeats = hashed_ngram_features(target_df, text_col, id_col, num_buckets)
     # Side-tagged union → ONE map-side-combinable aggregate builds both
     # marginals (a full-outer join of the two count tables would compile
@@ -646,9 +646,9 @@ def dsir_log_weights(
         .agg(F.sum("is_raw").alias("c_raw"), F.sum("is_tgt").alias("c_tgt"))
     )
     # dist is ≤ num_buckets rows but feeds two consumers (totals + ratio);
-    # the lazy barrier materializes the corpus aggregate exactly once, so
+    # the barrier materializes the corpus aggregate exactly once, so
     # the whole job is two corpus passes: build the ratio table, score.
-    dist = dist.localCheckpoint(eager=False)
+    dist = reuse(dist)
     totals = dist.agg(
         F.sum("c_raw").alias("t_raw"), F.sum("c_tgt").alias("t_tgt")
     )
@@ -755,16 +755,15 @@ def doremi_weights(
     from etl_pipeline2_0_spark.functions import text as _text
 
     scored = _text.char_bigram_lm_scores(df, text_col, id_col, prefix_len)
-    dom = (
+    # bounded ≤|domains|-row frame consumed by the stream side AND
+    # the min/count broadcast — without a barrier the whole
+    # char-bigram LM chain executes twice per action (r17
+    # optimization, guide §2.4)
+    dom = reuse(
         df.select(F.col(id_col).alias("doc_id"), F.col(domain_col).alias("domain"))
         .join(scored, "doc_id")
         .groupBy("domain")
         .agg(F.avg(-F.col("avg_logp")).alias("loss"))
-        # bounded ≤|domains|-row frame consumed by the stream side AND
-        # the min/count broadcast — without a barrier the whole
-        # char-bigram LM chain executes twice per action (r17
-        # optimization, guide §2.4)
-        .localCheckpoint(eager=False)
     )
     base = dom.crossJoin(
         F.broadcast(
@@ -781,9 +780,9 @@ def doremi_weights(
     )
     # The boost factor is static across steps (static proxy ⇒ exp() runs
     # once; the loop is pure rational arithmetic — engine-portable).
-    base = base.withColumn(
+    base = reuse(base.withColumn(
         "boost", F.exp(F.lit(float(eta)) * F.col("excess"))
-    ).localCheckpoint(eager=False)
+    ))
     w = base.withColumn("w", F.lit(1.0) / F.col("_nd"))
     s = float(smooth)
     for _ in range(int(steps)):
@@ -791,7 +790,7 @@ def doremi_weights(
         # each step's normalizer nests the whole prior tree, and the
         # 10-deep plan costs ~10 s in planning/overhead at sf0.1
         # (measured); with it the loop is `steps` trivial D-row jobs.
-        w = w.localCheckpoint(eager=False)
+        w = reuse(w)
         z = w.agg(F.sum(F.col("w") * F.col("boost")).alias("_z"))
         w = (
             w.crossJoin(F.broadcast(z))
@@ -1682,9 +1681,9 @@ def chat_pack(
     source); the mask accounting rides the same per-pack aggregate
     through one conv-id-keyed join of two narrow frames.
     """
-    conv = chat_assemble(
+    conv = reuse(chat_assemble(
         df, turns_per_conv, text_col, id_col, source_col
-    ).localCheckpoint(eager=False)
+    ))
     keys, packed = _assign_packs(
         conv.select(source_col, "conv_id", "conv_tokens"),
         budget_tokens,
@@ -2190,7 +2189,6 @@ def pack_waste_curve(
     id_col: str = "doc_id",
     source_col: str = "source",
     bucket_width: int = 1 << 20,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Context-length SIZING curve for sequence packing — what each
     candidate training context costs in padding and straddle at THIS
@@ -2218,13 +2216,11 @@ def pack_waste_curve(
         df, int(budgets[0]), text_col, id_col, source_col,
         None, bucket_width, None,
     )
-    base = packed.select(
+    base = reuse(packed.select(
         F.col(source_col).alias("_src"),
         (F.col("_b_off") + F.col("_local_prev")).alias("_prev"),
         "n_tokens",
-    )
-    if checkpoint:
-        base = base.localCheckpoint(eager=False)
+    ))
     out = None
     for B in budgets:
         B = int(B)
@@ -2312,13 +2308,13 @@ def anneal_mix_plan(
         ),
     )
     # The bounded ≤|sources| frame feeds four consumers (totals, flags,
-    # HQ-token sum, output) — a lazy checkpoint stops each from
+    # HQ-token sum, output) — the barrier stops each from
     # re-running the corpus pass (the lsh_geometry_sweep discipline).
-    per = per_doc.groupBy("grp").agg(
+    per = reuse(per_doc.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("nw").cast("bigint").alias("n_tokens"),
         F.sum("q_pm").cast("bigint").alias("su"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = per.agg(
         F.sum("n_tokens").cast("bigint").alias("t_tokens"),
         F.sum("su").cast("bigint").alias("t_su"),
@@ -2450,7 +2446,6 @@ def priority_sample_curve(
     ks: "tuple[int, ...]" = (8, 16, 32, 64),
     id_col: str = "doc_id",
     salt: str = "",
-    checkpoint: bool = True,
 ):
     """Sample-size SIZING sweep for :func:`priority_sample` — the tenth
     measured sizing curve (bloom_fpr / cms_error / lsh_geometry /
@@ -2472,7 +2467,7 @@ def priority_sample_curve(
     sample sum) whenever k covers the corpus.
 
     Scale: the corpus is touched twice (the scored TakeOrdered pass —
-    materialized once behind a lazy checkpoint because two consumers
+    materialized once behind a ``reuse`` barrier because two consumers
     read it — plus the exact total aggregate); every sweep
     computation runs on the ≤(max k + 1)-row frame; taus and the true
     total rejoin via broadcast 1-row crosses.
@@ -2502,16 +2497,11 @@ def priority_sample_curve(
         F.col("priority").desc(), F.col(id_col)
     ).limit(max_k + 1)
     win = Window.orderBy(F.col("priority").desc(), F.col(id_col))
-    ranked = top.withColumn("rank", F.row_number().over(win)).select(
+    # ranked feeds two consumers (taus + the estimate sums); the barrier
+    # keeps the scored corpus pass to one.
+    ranked = reuse(top.withColumn("rank", F.row_number().over(win)).select(
         "rank", "weight", "priority"
-    )
-    if checkpoint:
-        # ranked feeds two consumers (taus + the estimate sums); the
-        # lazy checkpoint materializes the ≤(max k + 1)-row frame once
-        # so the scored corpus pass runs once, not twice.
-        # checkpoint=False exists for plan pins (localCheckpoint prints
-        # as an opaque ExistingRDD scan).
-        ranked = ranked.localCheckpoint(eager=False)
+    ))
     taus = ranked.agg(
         *[
             F.coalesce(

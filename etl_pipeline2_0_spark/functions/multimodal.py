@@ -608,11 +608,36 @@ def _dct_matrix(n: int):
 
 _PHASH_DCT32 = None
 
+# Float noise floor for the median-thresholded hashes.  A value that is
+# zero in exact arithmetic comes out of the BLAS-backed DCT at about
+# ±1e-15, with a sign that depends on the host's BLAS kernel; values
+# within this distance of zero or of the median count as equal to them.
+_HASH_EPS = 1e-9
+
+
+def _median_bits(values) -> int:
+    """Signed 64-bit int whose bit i is set iff ``values[i]`` exceeds
+    the median by more than ``_HASH_EPS``.  Near-zero values snap to 0
+    first and ties at the median leave the bit clear, so the bits depend
+    on the input values only, not on float noise in computing them."""
+    import numpy as np
+
+    v = np.where(np.abs(values) < _HASH_EPS, 0.0, values)
+    med = float(np.median(v))
+    bits = 0
+    for i, x in enumerate(v):
+        if x - med > _HASH_EPS:
+            bits |= 1 << i
+    if bits >= 1 << 63:
+        bits -= 1 << 64
+    return bits
+
 
 def phash64(b: bytes):
     """64-bit perceptual image hash (classic pHash, public algorithm):
     luma → nearest-neighbor 32×32 resize → 2-D orthonormal DCT-II →
-    top-left 8×8 low-frequency block → bit i = coeff_i > median.
+    top-left 8×8 low-frequency block → bit i = coeff_i > median
+    (``_median_bits``).
 
     Pure numpy on the built-in BMP parser — deterministic, no codec libs.
     Returns a SIGNED 64-bit int (Spark LongType two's complement) or None
@@ -632,15 +657,7 @@ def phash64(b: bytes):
     if _PHASH_DCT32 is None:
         _PHASH_DCT32 = _dct_matrix(32)
     C = _PHASH_DCT32
-    block = (C @ small @ C.T)[:8, :8].ravel()
-    med = float(np.median(block))
-    bits = 0
-    for i, v in enumerate(block):
-        if v > med:
-            bits |= 1 << i
-    if bits >= 1 << 63:
-        bits -= 1 << 64
-    return bits
+    return _median_bits((C @ small @ C.T)[:8, :8].ravel())
 
 
 def image_phash(media: DataFrame, id_col: str = "media_id",
@@ -697,7 +714,7 @@ def audio_fingerprint64(b: bytes, n_frames: int = 16, n_bands: int = 4):
     energies, median-thresholded like pHash): mono-ized 16-bit PCM →
     ``n_frames`` equal segments → per-segment DFT magnitude split into
     ``n_bands`` bands (DC dropped) → bit i = energy_i > median of all
-    ``n_frames × n_bands`` energies.
+    ``n_frames × n_bands`` energies (``_median_bits``).
 
     Pure numpy over the built-in RIFF/WAVE parser — deterministic, no
     codec libs.  Returns a SIGNED 64-bit int or None for payloads the
@@ -726,15 +743,7 @@ def audio_fingerprint64(b: bytes, n_frames: int = 16, n_bands: int = 4):
     energies = np.array(
         [mags[:, i * k : (i + 1) * k].sum(axis=1) for i in range(n_bands)]
     ).T
-    flat = energies.ravel()
-    med = float(np.median(flat))
-    bits = 0
-    for i, v in enumerate(flat):
-        if v > med:
-            bits |= 1 << i
-    if bits >= 1 << 63:
-        bits -= 1 << 64
-    return bits
+    return _median_bits(energies.ravel())
 
 
 def audio_fingerprint(media: DataFrame, id_col: str = "media_id",

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline2_0_spark.functions.text import tokens
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 
 
 def chunk_documents(
@@ -597,7 +598,6 @@ def rm3_expansion_terms(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
     base: "DataFrame | None" = None,
     first_pass: "DataFrame | None" = None,
     postings: "DataFrame | None" = None,
@@ -652,18 +652,16 @@ def rm3_expansion_terms(
             text_col=text_col, id_col=id_col, base=base,
             postings=postings,
         )
-    first = first_pass.select(
+    # bounded (#queries x fb_k rows); feeds ssum AND the feedback-
+    # postings probe — without the cut each consumer re-runs the
+    # whole first BM25 pass
+    first = reuse(first_pass.select(
         "query_id",
         F.col(id_col),
         F.round(F.col("score") * F.lit(1_000_000.0))
         .cast("bigint")
         .alias("score_micro"),
-    )
-    if checkpoint:
-        # bounded (#queries x fb_k rows); feeds ssum AND the feedback-
-        # postings probe — without the cut each consumer re-runs the
-        # whole first BM25 pass (checkpoint=False un-blinds plan tests)
-        first = first.localCheckpoint(eager=False)
+    ))
     ssum = first.groupBy("query_id").agg(
         F.sum("score_micro").alias("ssum_micro")
     )
@@ -740,7 +738,6 @@ def bm25_rm3_topk(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
     base: "DataFrame | None" = None,
     first_pass: "DataFrame | None" = None,
     postings: "DataFrame | None" = None,
@@ -753,32 +750,25 @@ def bm25_rm3_topk(
     Scale: two BM25 passes + one feedback-doc pass; the expansion
     table (≤ #queries·fb_terms rows) broadcasts exactly like a literal
     query set, so the second pass has the first pass's shape.  The
-    bounded expansion table is lazily checkpointed — the second pass
-    consumes it in several places, and without the cut each consumer
-    would re-run the whole first-pass + feedback chain (measured 24
-    corpus scans un-checkpointed vs 9 with it).
+    bounded expansion table sits behind a ``reuse`` barrier — the
+    second pass consumes it in several places, and without the cut each
+    consumer would re-run the whole first-pass + feedback chain
+    (measured 24 corpus scans without the barrier vs 9 with it).
     """
     if base is None:
         # ONE tokenized-corpus projection for the first pass, the
         # feedback-postings probe AND the second pass (r17 optimization,
-        # guide §2.4: the chain re-ran the regex tokenizer five times);
-        # the barrier is skipped with checkpoint=False so plan tests see
-        # the full shape.
-        base = tokenized_base(docs, text_col, id_col)
-        if checkpoint:
-            base = base.localCheckpoint(eager=False)
-    exp = rm3_expansion_terms(
+        # guide §2.4: the chain re-ran the regex tokenizer five times).
+        base = reuse(tokenized_base(docs, text_col, id_col))
+    exp = reuse(rm3_expansion_terms(
         docs, queries, fb_k=fb_k, fb_terms=fb_terms, alpha=alpha,
         k1=k1, b=b, text_col=text_col, id_col=id_col,
-        checkpoint=checkpoint, base=base, first_pass=first_pass,
-        postings=postings,
+        base=base, first_pass=first_pass, postings=postings,
     ).select(
         "query_id",
         "term",
         (F.col("w_nano") / F.lit(1_000_000_000.0)).alias("weight"),
-    )
-    if checkpoint:
-        exp = exp.localCheckpoint(eager=False)
+    ))
     return bm25_topk(
         docs, exp, top_k=top_k, k1=k1, b=b,
         text_col=text_col, id_col=id_col, base=base,

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline2_0_spark.operators.partitioning import reuse
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢbᵢ in double precision (sequential, deterministic)."""
@@ -1181,9 +1183,9 @@ def pq_topk(
     # corpus encode and the query distance table; without a barrier the
     # codeword-sampling corpus pass runs twice per action (r17
     # optimization, guide §2.4).
-    cb = pq_codebook(
+    cb = reuse(pq_codebook(
         corpus, n_subspaces, n_codes, dim, vec_col, id_col
-    ).localCheckpoint(eager=False)
+    ))
     codes = pq_encode(corpus, cb, n_subspaces, dim, vec_col, id_col)
     qsub = _subvectors(queries, n_subspaces, dim, vec_col, id_col, "query_id")
     dtab = qsub.join(F.broadcast(cb), "m").select(
@@ -1291,8 +1293,8 @@ def kcenter_coreset(
 
     Scale shape: k−1 bounded iterations, each ONE corpus pass — the new
     center broadcasts (1 row), min_dist updates map-side, the argmax is
-    a TakeOrdered (orderBy+limit(1), never a full sort) — with a lazy
-    localCheckpoint per step so plans stay flat (the BPE loop
+    a TakeOrdered (orderBy+limit(1), never a full sort) — with a
+    ``reuse`` barrier per step so plans stay flat (the BPE loop
     discipline).  k is a constant (coreset sizes are human-chosen);
     corpus size only enters through the per-pass scan.
     """
@@ -1314,7 +1316,7 @@ def kcenter_coreset(
     center = seed.select(
         F.col("vec_id").alias("_cid"), F.col("v").alias("_cv")
     )
-    state = (
+    state = reuse(
         pts.crossJoin(F.broadcast(center))
         .where(F.col("vec_id") != F.col("_cid"))
         .select(
@@ -1322,11 +1324,10 @@ def kcenter_coreset(
             "v",
             F.round(1 - cosine(F.col("v"), F.col("_cv")), 6).alias("md"),
         )
-        .localCheckpoint(eager=False)
     )
     out = picked
     for rnk in range(2, k + 1):
-        nxt = (
+        nxt = reuse(
             state.orderBy(F.col("md").desc(), "vec_id")
             .limit(1)
             .select(
@@ -1334,7 +1335,6 @@ def kcenter_coreset(
                 F.col("v").alias("_cv"),
                 F.col("md").alias("_cmd"),
             )
-            .localCheckpoint(eager=False)
         )
         out = out.unionByName(
             nxt.select(
@@ -1343,7 +1343,7 @@ def kcenter_coreset(
                 F.col("_cmd").alias("sel_dist"),
             )
         )
-        state = (
+        state = reuse(
             state.crossJoin(F.broadcast(nxt))
             .where(F.col("vec_id") != F.col("_cid"))
             .select(
@@ -1354,7 +1354,6 @@ def kcenter_coreset(
                     F.round(1 - cosine(F.col("v"), F.col("_cv")), 6),
                 ).alias("md"),
             )
-            .localCheckpoint(eager=False)
         )
     return out
 
@@ -1388,13 +1387,13 @@ def mmr_select(
     Scale shape: identical to ``kcenter_coreset`` — k−1 bounded
     iterations, each one corpus pass with a 1-row broadcast of the new
     pick, running max-sim updated map-side, argmax via orderBy+limit(1)
-    (TakeOrdered), lazy localCheckpoint per step keeping plans flat.
+    (TakeOrdered), a ``reuse`` barrier per step keeping plans flat.
     """
     lam = float(lam)
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
     q = query.select(F.col(vec_col).alias("_qv")).limit(1)
-    pts = (
+    pts = reuse(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
         .crossJoin(F.broadcast(q))
         .select(
@@ -1402,13 +1401,11 @@ def mmr_select(
             "v",
             F.round(cosine(F.col("v"), F.col("_qv")), 6).alias("rel"),
         )
-        .localCheckpoint(eager=False)
     )
-    seed = (
+    seed = reuse(
         pts.orderBy(F.col("rel").desc(), "vec_id")
         .limit(1)
         .select("vec_id", "v", "rel")
-        .localCheckpoint(eager=False)
     )
     out = seed.select(
         F.lit(1).alias("rnk"),
@@ -1417,7 +1414,7 @@ def mmr_select(
         F.round(F.lit(lam) * F.col("rel"), 6).alias("score"),
     )
     center = seed.select(F.col("vec_id").alias("_cid"), F.col("v").alias("_cv"))
-    state = (
+    state = reuse(
         pts.crossJoin(F.broadcast(center))
         .where(F.col("vec_id") != F.col("_cid"))
         .select(
@@ -1426,7 +1423,6 @@ def mmr_select(
             "rel",
             F.round(cosine(F.col("v"), F.col("_cv")), 6).alias("ms"),
         )
-        .localCheckpoint(eager=False)
     )
     for rnk in range(2, k + 1):
         scored = state.select(
@@ -1438,7 +1434,7 @@ def mmr_select(
                 F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("ms"), 6
             ).alias("score"),
         )
-        nxt = (
+        nxt = reuse(
             scored.orderBy(F.col("score").desc(), "vec_id")
             .limit(1)
             .select(
@@ -1447,7 +1443,6 @@ def mmr_select(
                 F.col("rel").alias("_crel"),
                 F.col("score").alias("_cscore"),
             )
-            .localCheckpoint(eager=False)
         )
         out = out.unionByName(
             nxt.select(
@@ -1457,7 +1452,7 @@ def mmr_select(
                 F.col("_cscore").alias("score"),
             )
         )
-        state = (
+        state = reuse(
             state.crossJoin(F.broadcast(nxt))
             .where(F.col("vec_id") != F.col("_cid"))
             .select(
@@ -1469,7 +1464,6 @@ def mmr_select(
                     F.round(cosine(F.col("v"), F.col("_cv")), 6),
                 ).alias("ms"),
             )
-            .localCheckpoint(eager=False)
         )
     return out
 
@@ -1530,8 +1524,7 @@ def _block_cosine_pairs(
 
 
 def _bitext_margin_from_pairs(
-    pairs: DataFrame, k: int, margin_threshold: float,
-    checkpoint: bool = True,
+    pairs: DataFrame, k: int, margin_threshold: float
 ) -> DataFrame:
     """Artetxe–Schwenk margin scoring over a scored candidate-pair frame
     ``(src_id, tgt_id, cos)`` — factored out of ``bitext_mine`` so the
@@ -1541,7 +1534,7 @@ def _bitext_margin_from_pairs(
 
     ``pairs`` must carry 6dp-rounded cosines and be cheap to consume
     three times (both kNN means + the per-source argmax) — every caller
-    checkpoints the pair table before handing it over.
+    puts the pair table behind a ``reuse`` barrier before handing it over.
     """
     from pyspark.sql.window import Window
 
@@ -1565,11 +1558,9 @@ def _bitext_margin_from_pairs(
     # rn == 1 ⊆ rn <= max(k, 1), so cand is unchanged for every k; ms
     # re-filters rn <= k and stays empty for k < 1 exactly as the
     # two-pass form made it.
-    top_s = pairs.withColumn("_rn", F.row_number().over(w_s)).where(
+    top_s = reuse(pairs.withColumn("_rn", F.row_number().over(w_s)).where(
         F.col("_rn") <= max(k, 1)
-    )
-    if checkpoint:
-        top_s = top_s.localCheckpoint(eager=False)
+    ))
     ms = (
         top_s.where(F.col("_rn") <= k)
         .groupBy("src_id")
@@ -1612,7 +1603,6 @@ def bitext_mine(
     method: str = "exact",
     n_centroids: int = 16,
     n_probe: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk 2019, "Margin-based
     Parallel Corpus Mining with Multilingual Sentence Embeddings" — the
@@ -1678,15 +1668,10 @@ def bitext_mine(
                 F.sequence(F.lit(0), F.lit(exact_blocks - 1))
             ).alias("blk"),
         )
-        pairs = _block_cosine_pairs(sa, tb)
         # pairs feed three consumers (both kNN means + the argmax) —
         # one barrier materializes the scored pair table once
-        # (checkpoint=False exposes the scoring subtree for plan pins).
-        if checkpoint:
-            pairs = pairs.localCheckpoint(eager=False)
-        return _bitext_margin_from_pairs(
-            pairs, k, margin_threshold, checkpoint=checkpoint
-        )
+        pairs = reuse(_block_cosine_pairs(sa, tb))
+        return _bitext_margin_from_pairs(pairs, k, margin_threshold)
     if method != "ivf":
         raise ValueError(f"unknown bitext_mine method: {method!r}")
 
@@ -1739,12 +1724,8 @@ def bitext_mine(
     dir_ts = _block_cosine_pairs(
         _homes(s_c, "src_id"), _probes(t_c, "tgt_id"), key="cluster"
     )
-    pairs = dir_st.unionByName(dir_ts).distinct()
-    if checkpoint:
-        pairs = pairs.localCheckpoint(eager=False)
-    return _bitext_margin_from_pairs(
-        pairs, k, margin_threshold, checkpoint=checkpoint
-    )
+    pairs = reuse(dir_st.unionByName(dir_ts).distinct())
+    return _bitext_margin_from_pairs(pairs, k, margin_threshold)
 
 
 def bitext_mine_recall(
@@ -1845,9 +1826,9 @@ def semdedup_eps_curve(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
     cents = portable_centroids(c, n_centroids)
-    assigned = portable_assign(c, cents).select(
+    assigned = reuse(portable_assign(c, cents).select(
         "neighbor_id", "c_vec", "cluster"
-    ).localCheckpoint(eager=False)
+    ))
     a = assigned.select(
         F.col("neighbor_id").alias("id_a"),
         F.col("c_vec").alias("va"),
@@ -2140,7 +2121,6 @@ def ann_hubness(
     top_hubs: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Hubness audit of an ANN index (Radovanović et al. 2010): in high
     dimensions the k-occurrence distribution N_k (how many top-k lists
@@ -2168,16 +2148,14 @@ def ann_hubness(
     corpus-independent); the summary collapses to a broadcast single row
     and the final top-hub window ranks only distinct retrieved vectors.
     """
-    topk = ivf_topk_portable(
-        corpus, queries, k=k, n_centroids=n_centroids, n_probe=n_probe,
-        vec_col=vec_col, id_col=id_col, blocked=True,
-    )
     # The bounded (≤ k·|queries|-row) top-k frame feeds TWO consumers
     # (occurrence count + the n_lists/antihub summary); without a
     # barrier the whole IVF probe join executes twice per action (r17
-    # optimization, guide §2.4).  checkpoint=False un-blinds plan tests.
-    if checkpoint:
-        topk = topk.localCheckpoint(eager=False)
+    # optimization, guide §2.4).
+    topk = reuse(ivf_topk_portable(
+        corpus, queries, k=k, n_centroids=n_centroids, n_probe=n_probe,
+        vec_col=vec_col, id_col=id_col, blocked=True,
+    ))
     occ = topk.groupBy("neighbor_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_occ")
     )
@@ -2417,7 +2395,6 @@ def contrastive_triplets(
 def embed_dim_stats(
     df: DataFrame,
     vec_col: str = "embedding",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-dimension embedding diagnostics: mean, population variance,
     and each dimension's share of total variance — the table that
@@ -2472,13 +2449,9 @@ def embed_dim_stats(
         - F.col("su").cast("double") * F.col("su").cast("double")
     )
     # The bounded d-row frame feeds BOTH the output and the total fold:
-    # a lazy checkpoint stops the two consumers re-running the corpus
-    # pass (the lsh_geometry_sweep discipline).  ``checkpoint=False``
-    # exposes the un-truncated plan (plan-shape tests pin the scan /
-    # partial-aggregate shape there, since a checkpoint hides lineage).
-    sd = s.select("dim", "n", "su", num.alias("_num"))
-    if checkpoint:
-        sd = sd.localCheckpoint(eager=False)
+    # the barrier stops the two consumers re-running the corpus pass
+    # (the lsh_geometry_sweep discipline).
+    sd = reuse(s.select("dim", "n", "su", num.alias("_num")))
     tot = sd.agg(
         F.aggregate(
             F.array_sort(F.collect_list("_num")),
@@ -2538,18 +2511,18 @@ def embed_pca_top(
 
     Scale: ``n_iter`` bounded iterations, each ONE corpus pass (the
     1-row iterate broadcasts; the per-dim aggregate is map-side
-    combined), with a lazy checkpoint per step so plans stay flat.
+    combined), with a ``reuse`` barrier per step so plans stay flat.
     Exactness bounds: Σ|q·d| per dim needs < 10^38 — safe past 10^15
     vectors; the corpus enters each pass only through the scan.
     """
-    e = corpus.select(
+    e = reuse(corpus.select(
         F.transform(
             F.col(vec_col),
             lambda x: F.round(x.cast("double") * F.lit(100_000.0)).cast(
                 "bigint"
             ),
         ).alias("q")
-    ).localCheckpoint(eager=False)
+    ))
 
     def matvec(p_row: DataFrame) -> DataFrame:
         """One corpus pass: d_r = q_r·p (exact), w_i = Σ_r q_ri·d_r."""
@@ -2575,13 +2548,13 @@ def embed_pca_top(
         F.array(*[F.lit(1000).cast("bigint") for _ in range(dims)]).alias("p")
     )
     for _ in range(n_iter):
-        w = matvec(p_row).localCheckpoint(eager=False)
+        w = reuse(matvec(p_row))
         g = w.agg(
             F.greatest(
                 F.expr("max(abs(w)) div 1000").cast("bigint"), F.lit(1)
             ).alias("g")
         )
-        p_row = (
+        p_row = reuse(
             w.crossJoin(F.broadcast(g))
             .select(
                 "dim",
@@ -2599,7 +2572,6 @@ def embed_pca_top(
                     lambda s: s["p"],
                 ).alias("p")
             )
-            .localCheckpoint(eager=False)
         )
 
     pp_row = p_row.select(
@@ -2890,7 +2862,6 @@ def label_noise_matrix(
     id_col: str = "vec_id",
     label_col: str = "label",
     topk=None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Class-conditional label-noise matrix (the confident-learning
     count matrix of Northcutt et al. 2021, with the k-NN vote as the
@@ -2924,17 +2895,15 @@ def label_noise_matrix(
         F.col(id_col).alias("query_id"),
         F.col(label_col).cast("bigint").alias("given_label"),
     )
-    mat = (
+    # The ≤|classes|²-row matrix feeds the row-total aggregate AND the
+    # final join; without a barrier the whole kNN-vote subtree (the
+    # expensive broadcast-scored top-k) executes twice per action (r17
+    # optimization, guide §2.4).
+    mat = reuse(
         pred.join(truth, "query_id")
         .groupBy("given_label", "pred_label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    # The ≤|classes|²-row matrix feeds the row-total aggregate AND the
-    # final join; without a barrier the whole kNN-vote subtree (the
-    # expensive broadcast-scored top-k) executes twice per action (r17
-    # optimization, guide §2.4).  checkpoint=False un-blinds plan tests.
-    if checkpoint:
-        mat = mat.localCheckpoint(eager=False)
     totals = mat.groupBy("given_label").agg(
         F.sum("n").alias("n_given")
     )

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline2_0_spark.operators.partitioning import reuse
+
 
 def _cms_bucket(item: Column, row: Column, width: int) -> Column:
     """Row-salted portable bucket: md5-hex15(row ':' item) mod width."""
@@ -297,21 +299,19 @@ def bloom_fpr_curve(
     n_flagged ≥ n_true_present on every row.
 
     Scale: truth and candidates are each materialized ONCE (distinct +
-    lazy checkpoint) and re-probed per width; every per-width pass is
+    ``reuse`` barrier) and re-probed per width; every per-width pass is
     the bloom_build/bloom_probe broadcast shape (≤ num_bits-row filter
     relation, candidates never move), and each width contributes one
     aggregated row — the output is |widths| rows regardless of corpus
     size.
     """
-    cand = (
+    cand = reuse(
         candidates.select(F.col(item_col).alias("item"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    truth = (
+    truth = reuse(
         truth_items.select(F.col(item_col).alias("item"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     truth_flag = truth.withColumn("_t", F.lit(1))
     out = None
@@ -391,11 +391,10 @@ def cms_error_curve(
     |vocab|·depth rows per width, not corpus·depth, and the estimate
     probe joins sketch cells at (row, bucket) grain.
     """
-    exact = (
+    exact = reuse(
         items.select(F.col(item_col).alias("item"))
         .groupBy("item")
         .agg(F.count(F.lit(1)).cast("bigint").alias("true_cnt"))
-        .localCheckpoint(eager=False)
     )
     rows = F.sequence(F.lit(0), F.lit(depth - 1))
     out = None

@@ -23,6 +23,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline2_0_spark.operators.partitioning import reuse
+
 # Tiny per-language stopword marker sets for the n-gram/stopword language-ID
 # heuristic.  ASCII-only on purpose: identical regex semantics in Java
 # (Spark) and RE2 (DuckDB).
@@ -590,7 +592,7 @@ def bpe_fertility_curve(
 
     Scale: the training loop is corpus-size-independent after the
     bounded word-type cut (the ``bpe_train_merges`` story); snapshots
-    reuse the loop's per-step lazy checkpoints, so the curve costs one
+    reuse the loop's per-step barriers, so the curve costs one
     training run plus |ks| bounded aggregates.
     """
     # r17 optimization (guide §1.2/§5): the snapshots are driver-local
@@ -703,11 +705,11 @@ def vocab_oov_curve(
                 )
             )
         units = F.concat(*grams)
-    freq = (
+    freq = reuse(
         df.select(F.explode(units).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("f"))
-    ).localCheckpoint(eager=False)
+    )
     tot = freq.agg(
         F.sum("f").cast("bigint").alias("total_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_types"),
@@ -1079,7 +1081,7 @@ def kneser_ney_scores(
     if train_df is None:
         # Self-trained: bg feeds the model build AND the scoring pass —
         # barrier the diamond so the tokenize+explode runs once.
-        bg = bg.localCheckpoint(eager=False)
+        bg = reuse(bg)
         bg_train = bg
     else:
         bg_train = _bigram_rows(train_df)
@@ -1089,7 +1091,7 @@ def kneser_ney_scores(
     # bc feeds four consumers (scoring join, context, continuation,
     # totals) — one barrier materializes the only training-corpus-wide
     # aggregate exactly once.
-    bc = bc.localCheckpoint(eager=False)
+    bc = reuse(bc)
     ctx = bc.groupBy("w1").agg(
         F.sum("bc").cast("bigint").alias("c1"),
         F.count(F.lit(1)).cast("bigint").alias("n1w"),
@@ -1334,7 +1336,7 @@ def quality_classifier_scores(
     """
     pos = _hashed_unigram_rows(pos_df, text_col, id_col, num_buckets)
     neg = _hashed_unigram_rows(neg_df, text_col, id_col, num_buckets)
-    dist = (
+    dist = reuse(  # feeds totals AND the odds table
         pos.select("bucket", F.lit(1).alias("is_p"), F.lit(0).alias("is_n"))
         .unionAll(
             neg.select(
@@ -1343,7 +1345,6 @@ def quality_classifier_scores(
         )
         .groupBy("bucket")
         .agg(F.sum("is_p").alias("c_pos"), F.sum("is_n").alias("c_neg"))
-        .localCheckpoint(eager=False)  # feeds totals AND the odds table
     )
     totals = dist.agg(
         F.sum("c_pos").alias("t_pos"), F.sum("c_neg").alias("t_neg")
@@ -1497,7 +1498,7 @@ def zipf_token_stats(
     counts = toks.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    counts = counts.localCheckpoint(eager=False)  # feeds top-k AND total
+    counts = reuse(counts)  # feeds top-k AND total
     total = counts.agg(F.sum("cnt").cast("double").alias("_tot"))
     top = (
         counts.orderBy(F.col("cnt").desc(), F.col("token"))
@@ -1568,7 +1569,7 @@ def heaps_vocab_growth(
             lambda t: F.length(t) > 0,
         ).alias("_toks"),
     )
-    base = base.localCheckpoint(eager=False)  # feeds doc stats AND types
+    base = reuse(base)  # feeds doc stats AND types
     per_bucket = base.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.size("_toks")).cast("bigint").alias("n_tokens"),
@@ -2551,7 +2552,6 @@ def quality_length_bias(
     max_bucket: int = 8,
     threshold: float = 0.5,
     text_col: str = "text",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Length-bias audit of the quality gate — the known failure mode
     of quality classifiers (Gopher §A.2 and the DCLM ablations both
@@ -2577,10 +2577,9 @@ def quality_length_bias(
 
     Scale: ONE narrow corpus pass into a map-side-combined aggregate
     on the bounded bucket key; the bounded (≤ max_bucket+1 row)
-    aggregate is lazily checkpointed so the grand-total branch reads
-    it instead of re-scanning the corpus (checkpoint=False un-blinds
-    plan tests); the 1-row total broadcasts back for the share.  No
-    join with the corpus, no window.
+    aggregate sits behind a ``reuse`` barrier so the grand-total branch
+    reads it instead of re-scanning the corpus; the 1-row total
+    broadcasts back for the share.  No join with the corpus, no window.
     """
     t = F.col(text_col)
     score = quality_score(t)
@@ -2602,15 +2601,13 @@ def quality_length_bias(
         F.round(content * F.lit(1_000_000.0)).cast("bigint").alias("c_u"),
         (score < F.lit(float(threshold))).cast("bigint").alias("kill"),
     )
-    agg = rows.groupBy("bucket").agg(
+    agg = reuse(rows.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("s_u").alias("_ss"),
         F.sum("l_u").alias("_sl"),
         F.sum("c_u").alias("_sc"),
         F.sum("kill").alias("_k"),
-    )
-    if checkpoint:
-        agg = agg.localCheckpoint(eager=False)
+    ))
     tot = agg.agg(F.sum("n_docs").alias("_t"))
     return (
         agg.crossJoin(F.broadcast(tot))

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline2_0_spark.operators.partitioning import reuse
+
 
 def _word_types(
     df: DataFrame,
@@ -51,12 +53,11 @@ def _word_types(
             )
         ).alias("word")
     ).where(F.length("word") <= max_word_len)
-    return (
+    return reuse(
         toks.groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
         .orderBy(F.col("freq").desc(), F.col("word").asc())
         .limit(max_word_types)
-        .localCheckpoint(eager=False)
     )
 
 
@@ -529,12 +530,11 @@ def unigram_fertility(
     sw = toks.groupBy("grp", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    wt_all = (
+    wt_all = reuse(
         sw.where(F.length("word") <= max_word_len)
         .select("word")
         .distinct()
         .select("word", F.lit(1).cast("bigint").alias("freq"))
-        .localCheckpoint(eager=False)
     )
     spans_all = _spans(wt_all, max_piece_len).join(
         F.broadcast(vocab.select("piece", "logp")), "piece"
@@ -609,12 +609,11 @@ def unigram_encode_docs(
     dw = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    wt_all = (
+    wt_all = reuse(
         dw.where(F.length("word") <= max_word_len)
         .select("word")
         .distinct()
         .select("word", F.lit(1).cast("bigint").alias("freq"))
-        .localCheckpoint(eager=False)
     )
     spans_all = _spans(wt_all, max_piece_len).join(
         F.broadcast(vocab.select("piece", "logp")), "piece"
@@ -683,10 +682,9 @@ def tokenizer_compare(
         F.col(group_col).alias("grp"),
         F.explode(tokens(F.col(text_col))).alias("word"),
     )
-    sw = (
+    sw = reuse(
         toks.groupBy("grp", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
     )
     bseg = bpe_segment_words(
         df, text_col, n_merges, max_word_types_bpe
@@ -695,12 +693,11 @@ def tokenizer_compare(
         df, text_col, vocab_size, em_iters, max_piece_len,
         max_word_types, max_word_len,
     )
-    wt_all = (
+    wt_all = reuse(
         sw.where(F.length("word") <= max_word_len)
         .select("word")
         .distinct()
         .select("word", F.lit(1).cast("bigint").alias("freq"))
-        .localCheckpoint(eager=False)
     )
     spans_all = _spans(wt_all, max_piece_len).join(
         F.broadcast(vocab.select("piece", "logp")), "piece"

@@ -25,7 +25,7 @@ Scale notes:
   combine), and the join broadcasts one row.
 - Deliberately NOT reproduced: the reference's cross-file record-accumulation
   bug (etl_pipeline.py:26 list never cleared across runs — SURVEY.md §2.9);
-  each ``normalize`` call is a pure function of its inputs.
+  each ``normalize_union`` call is a pure function of its inputs.
 """
 
 from __future__ import annotations
@@ -66,48 +66,29 @@ def kind_rank(col):
     return F.array_position(order, col)
 
 
-def normalize(
-    per_kind: dict[str, DataFrame],
-    per_document: bool = False,
-    keep_provenance: bool = False,
-) -> DataFrame:
-    """P1 → U1 → W1 → F9 → O1/P3: the reference's ``normalize`` stage.
-
-    Takes the per-kind record frames from ``extract_records`` and produces
-    the single rectangular table with universal columns ``type``,
-    ``source_index``, ``total_items`` and lexicographically-sorted data
-    columns.  Output row order is only meaningful via the ``_kind_rank`` /
-    ``ordinal`` sort keys (Spark tables are unordered); ``sorted_output``
-    applies the reference's display ordering when a deterministic order is
-    required (demo CSV, goldens).
-    """
-    # fixed order html→json→text→media (U1); P1 drop applied per-frame
-    frames = [per_kind[kind].drop(*ARTIFACT_COLUMNS) for kind in KIND_ORDER]
-    return normalize_union(
-        union_by_name(frames),
-        per_document=per_document,
-        keep_provenance=keep_provenance,
-        pre_drop=False,
-    )
-
-
 def normalize_union(
     unioned: DataFrame,
     per_document: bool = False,
     keep_provenance: bool = False,
-    pre_drop: bool = True,
 ) -> DataFrame:
-    """``normalize`` over an already-unioned frame.
+    """P1 → W1 → F9 → O1/P3: the reference's ``normalize`` stage over
+    the union-by-name (U1, kind order html→json→text→media) of the
+    per-kind record frames from ``extract_records``.
 
-    Lets multi-action callers (``run_batch``) persist ONE frame — the
-    pre-drop union the schema report also reads — and derive everything
-    downstream from the cache instead of re-running detect+extract per
-    action.  Dropping the P1 artifact columns before or after the
-    union-by-name is equivalent (missing columns are null-filled either
-    way), which is what makes the shared frame possible.
+    Produces the single rectangular table with universal columns
+    ``type``, ``source_index``, ``total_items`` and lexicographically-
+    sorted data columns.  Output row order is only meaningful via the
+    ``ordinal`` sort key (Spark tables are unordered); ``sorted_output``
+    applies the reference's display ordering when a deterministic order
+    is required (demo CSV, goldens).
+
+    Taking the union rather than the per-kind frames lets callers share
+    ONE frame — the pre-drop union the schema report also reads
+    (``run_batch`` persists it so detect+extract runs once).  Dropping
+    the P1 artifact columns after the union-by-name equals dropping them
+    per kind: missing columns are null-filled either way.
     """
-    if pre_drop:
-        unioned = unioned.drop(*ARTIFACT_COLUMNS)  # P1
+    unioned = unioned.drop(*ARTIFACT_COLUMNS)  # P1
     with_total = with_total_items(unioned, per_document=per_document)
     # F9: total_items coerced to bigint, nulls → 0 (try_cast ≡ errors='coerce')
     with_total = with_total.withColumn(

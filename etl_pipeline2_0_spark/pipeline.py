@@ -21,7 +21,6 @@ from etl_pipeline2_0_spark.operators.detect import detect_blocks
 from etl_pipeline2_0_spark.operators.extract import KIND_ORDER, extract_records
 from etl_pipeline2_0_spark.operators.partitioning import ensure_min_parallelism
 from etl_pipeline2_0_spark.operators.normalize import (
-    normalize,
     normalize_union,
     sorted_output,
     union_by_name,
@@ -53,11 +52,11 @@ def transform_documents(
     docs = ensure_min_parallelism(docs)
     detected = detect_blocks(docs)
     per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
-    report = None
-    if with_report:
-        pre_drop = union_by_name([per_kind[k] for k in KIND_ORDER])
-        report = infer_schema_report(pre_drop)
-    normalized = normalize(per_kind, per_document=per_document, keep_provenance=True)
+    pre_drop = union_by_name([per_kind[k] for k in KIND_ORDER])
+    report = infer_schema_report(pre_drop) if with_report else None
+    normalized = normalize_union(
+        pre_drop, per_document=per_document, keep_provenance=True
+    )
     return normalized, report
 
 

@@ -18,6 +18,7 @@ from etl_pipeline2_0_spark.functions import (
     similarity,
     text,
 )
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 from etl_pipeline2_0_spark.pipeline import transform_documents
 from etl_pipeline2_0_spark.sources.tables import load_table
 
@@ -890,19 +891,18 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_set = docs.where(F.col("doc_id") % 97 == 0)
     corpus = docs.where(F.col("doc_id") % 97 != 0)
     # Both shingle frames feed two consumers each (eval: bloom bits + the
-    # exact side; corpus: the candidate set + the per-doc rollup) — lazy
+    # exact side; corpus: the candidate set + the per-doc rollup) — the
     # barriers materialize each tokenizer pass once (the jaccard_pairs
     # discipline; measured ~2× on this query at sf0.1).
-    eval_sh = (
+    eval_sh = reuse(
         eval_set.select(
             F.explode(dedup.token_shingles(F.col("text"), 3)).alias("item")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    pairs = corpus.select(
+    pairs = reuse(corpus.select(
         "doc_id", F.explode(dedup.token_shingles(F.col("text"), 3)).alias("item")
-    ).localCheckpoint(eager=False)
+    ))
     bloom = sketches.bloom_build(eval_sh, num_hashes=4, num_bits=4096)
     verdicts = sketches.bloom_probe(
         pairs.select("item").distinct(), bloom, num_hashes=4, num_bits=4096
@@ -1143,9 +1143,7 @@ def q_minhash_band_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE candidate subtree for both the count and the verify consumer
     # (r17 optimization, guide §2.4): previously `verified` re-ran the
     # whole signatures→banding chain via minhash_near_duplicates.
-    cand = dedup.lsh_candidate_pairs(sigs, 8, 2, 1000, True).localCheckpoint(
-        eager=False
-    )
+    cand = reuse(dedup.lsh_candidate_pairs(sigs, 8, 2, 1000, True))
     verified = dedup.minhash_verify_candidates(docs, cand, k=3, threshold=0.5)
     return (
         cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))

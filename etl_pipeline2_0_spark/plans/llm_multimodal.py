@@ -250,11 +250,9 @@ def q_audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_near_duplicates(media, max_hamming=6, blocks=8)
 
 
-def q_video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Video-side corpus dedup: 4-frame BMPS containers synthesized from
-    # embedding quarters (similar vectors -> similar frames), then clips
-    # sharing >=2 perceptually-near frames (frame pHash Hamming <= 6,
-    # blocks=8).  Pandas-UDF stages -> no DuckDB twin; golden-pinned.
+def _synth_bmps_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # 4-frame BMPS containers synthesized from embedding quarters
+    # (similar vectors -> similar frames).
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") % 2 == 0)
 
     def make(batches):
@@ -279,11 +277,18 @@ def q_video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 payloads.append(encode_bmps(frames))
             yield pd.DataFrame({"media_id": pdf["vec_id"], "payload": payloads})
 
-    media = emb.select("vec_id", "embedding").mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         make, "media_id long, payload binary"
     )
+
+
+def q_video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Video-side corpus dedup: clips sharing >=2 perceptually-near frames
+    # (frame pHash Hamming <= 6, blocks=8).  Pandas-UDF stages -> no
+    # DuckDB twin; golden-pinned.
     return multimodal.video_near_duplicates(
-        media, every_nth=1, frame_max_hamming=6, min_common_frames=2
+        _synth_bmps_media(spark, sf_dir),
+        every_nth=1, frame_max_hamming=6, min_common_frames=2,
     )
 
 

@@ -18,6 +18,7 @@ from etl_pipeline2_0_spark.functions import (
     similarity,
     text,
 )
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 from etl_pipeline2_0_spark.pipeline import transform_documents
 from etl_pipeline2_0_spark.sources.tables import load_table
 
@@ -660,10 +661,9 @@ def q_retrieval_ndcg_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     #
     # Scale: the three rankers share the broadcast-pruned postings
     # shape (query terms broadcast, postings equi-joined); the grading
-    # joins are per-query frames of ≤ k rows.  The truth table is
-    # computed once and fanned out to three graders — at corpus scale
-    # it would be localCheckpoint'd like the RM3 feedback set; here it
-    # is a bounded aggregate (#queries × matched docs).
+    # joins are per-query frames of ≤ k rows.  The truth table is a
+    # bounded aggregate (#queries × matched docs), computed once and
+    # fanned out to three graders.
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 5 == 0
     )
@@ -674,7 +674,7 @@ def q_retrieval_ndcg_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenized-corpus projection shared by the truth table and all
     # THREE rankers (r17 optimization, guide §2.4 — the rankers each
     # rebuilt it, the RM3 chain several times over).
-    base = retrieval.tokenized_base(docs).localCheckpoint(eager=False)
+    base = reuse(retrieval.tokenized_base(docs))
     # r18 optimization (guide §2.4 — remove duplicate passes outright):
     # ONE pruned postings table serves the bm25 scorer, the Dirichlet-QL
     # scorer (byte-identical construction in both) AND the relevance
@@ -682,26 +682,23 @@ def q_retrieval_ndcg_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same (doc, term, tf) rows the rankers score from, so the corpus
     # explode+join+aggregate runs once instead of four times.
     term_set = qterms.select("term").distinct()
-    postings = retrieval.bm25_postings(base, term_set).localCheckpoint(
-        eager=False
-    )
-    rel = (
+    postings = reuse(retrieval.bm25_postings(base, term_set))
+    # The truth table is consumed TWICE per grader (dcg join + ideal
+    # ranking) across THREE graders = six executions of the corpus
+    # tokenize+aggregate without a barrier (r17 optimization, guide
+    # §2.4); the frame is bounded (#queries × matched docs).
+    rel = reuse(
         postings.join(F.broadcast(qterms), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("tf").alias("rel"))
-        # The truth table is consumed TWICE per grader (dcg join + ideal
-        # ranking) across THREE graders = six executions of the corpus
-        # tokenize+aggregate without a barrier (r17 optimization, guide
-        # §2.4); the frame is bounded (#queries × matched docs).
-        .localCheckpoint(eager=False)
     )
     # The plain bm25 ranking IS RM3's feedback retrieval (same corpus,
     # queries, k1/b, and top_k == fb_k == 5), so it is computed once,
     # cut (bounded: #queries × 5 rows), graded as ranker #1 AND handed
     # to the RM3 chain as its first pass (r18, guide §2.4).
-    bm25_ranked = retrieval.bm25_topk(
+    bm25_ranked = reuse(retrieval.bm25_topk(
         docs, _BM25_QUERIES, top_k=5, base=base, postings=postings
-    ).localCheckpoint(eager=False)
+    ))
     rankers = [
         ("bm25", bm25_ranked),
         (

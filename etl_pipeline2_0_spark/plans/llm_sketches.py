@@ -18,6 +18,7 @@ from etl_pipeline2_0_spark.functions import (
     similarity,
     text,
 )
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 from etl_pipeline2_0_spark.pipeline import transform_documents
 from etl_pipeline2_0_spark.sources.tables import load_table
 
@@ -39,15 +40,14 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("item")
     )
     sk = sketches.cms_sketch(occ, depth=4, width=256)
-    exact = (
+    # bounded 20-row frame consumed by the probe AND the final join
+    # — without a barrier the full explode+aggregate+TakeOrdered
+    # runs twice per action (r17 optimization, guide §2.4)
+    exact = reuse(
         occ.groupBy(F.col("item"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
         .orderBy(F.col("exact_cnt").desc(), F.col("item"))
         .limit(20)
-        # bounded 20-row frame consumed by the probe AND the final join
-        # — without a barrier the full explode+aggregate+TakeOrdered
-        # runs twice per action (r17 optimization, guide §2.4)
-        .localCheckpoint(eager=False)
     )
     est = sketches.cms_estimate(exact.select("item"), sk, depth=4, width=256)
     return exact.join(est, "item").select(

@@ -190,14 +190,10 @@ def write_partitioned(
     replaces only the partitions present in ``df`` — the idempotent
     backfill/re-run primitive — instead of truncating the whole table.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    writer = df.write.mode("overwrite").partitionBy(*partition_cols)
     if dynamic_overwrite:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(path)
 
 
 def write_shards(

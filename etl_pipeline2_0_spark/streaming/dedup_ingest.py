@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_pipeline2_0_spark.functions import dedup, mixing
+from etl_pipeline2_0_spark.operators.partitioning import reuse
 
 
 def _dedup_survivors(
@@ -232,17 +233,9 @@ def _write_fim_examples(
                 f"FIM reconstruction invariant violated for {bad} "
                 f"example(s) in batch {batch_id}; refusing to write"
             )
-    sess = ex.sparkSession
-    prev_mode = sess.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    try:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        ex.write.mode("overwrite").partitionBy("batch_id").parquet(
-            examples_path
-        )
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    ex.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("batch_id").parquet(examples_path)
 
 
 def stream_curated_ingest(
@@ -345,33 +338,16 @@ def stream_curated_ingest(
             # are partitioned by batch_id and that batch's partition is
             # OVERWRITTEN under dynamic partitionOverwriteMode, so a
             # crash-replayed micro-batch rewrites its own rows instead
-            # of appending duplicates (same set/restore discipline as
-            # sinks/load.upsert_snapshot_partitions).  The conf must be
-            # set on the METRIC frame's session — the PSI join of the
-            # micro-batch clone's frame against the caller-session
-            # psi_reference can bind the result to the caller session,
-            # where a conf set on batch_df.sparkSession never lands.
+            # of appending duplicates.
             metric_df = corpus_drift_psi(
                 psi_reference,
                 batch_df,
                 group_col=group_col,
                 text_col=text_col,
             ).withColumn("batch_id", F.lit(batch_id))
-            sess = metric_df.sparkSession
-            prev_mode = sess.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            try:
-                sess.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                metric_df.write.mode("overwrite").partitionBy(
-                    "batch_id"
-                ).parquet(metrics_path)
-            finally:
-                sess.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
+            metric_df.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("batch_id").parquet(metrics_path)
         if gate_metrics_path is not None:
             from etl_pipeline2_0_spark.functions import text as text_fns
 
@@ -405,21 +381,9 @@ def stream_curated_ingest(
                     F.lit(batch_id).alias("batch_id"),
                 )
             )
-            sess2 = gm.sparkSession
-            prev2 = sess2.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            try:
-                sess2.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                gm.write.mode("overwrite").partitionBy("batch_id").parquet(
-                    gate_metrics_path
-                )
-            finally:
-                sess2.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev2
-                )
+            gm.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("batch_id").parquet(gate_metrics_path)
         out = curate_batch(
             batch_df,
             corpus_path,
@@ -438,7 +402,7 @@ def stream_curated_ingest(
             # example writes; materialize once so the gate+dedup subtree
             # doesn't run per consumer.
             if cms_store is not None or examples_path is not None:
-                out = out.localCheckpoint(eager=False)
+                out = reuse(out)
             if examples_path is not None:
                 _write_fim_examples(
                     out, examples_path, batch_id, text_col, id_col,

@@ -1495,23 +1495,24 @@ def test_video_near_duplicates_frame_matching(spark):
     from etl_pipeline2_0_spark.functions import multimodal
 
     def frame(seed):
-        # Structurally distinct patterns (verified pairwise pHash Hamming
-        # ≥ 12) — pHash is brightness-invariant, so constant-fill frames
-        # with different fills would collide.
-        px = np.array(
-            [
-                (x * seed * 37 + y * 11) % 256
-                for x in range(4)
-                for y in range(4)
-                for _ in range(3)
-            ],
-            dtype=np.uint8,
-        ).reshape(4, 4, 3)
+        # Structurally distinct 2-D patterns (pairwise pHash Hamming ≥ 8,
+        # asserted below) — pHash is brightness-invariant, so constant-fill
+        # frames with different fills would collide, and so do additive
+        # x/y ramps, whose DCT blocks are zero off the first row and column.
+        px = np.random.default_rng(seed).integers(
+            0, 256, size=(4, 4, 3), dtype=np.uint8
+        )
         return multimodal.encode_bmp(px)
 
     # Clips 1 and 2 share two identical frames (A, B); clip 3 shares only
     # one (A); clip 4 shares none with 2 but C with 1.
     A, B, C, D, E = (frame(s) for s in (1, 2, 3, 4, 5))
+    hashes = [multimodal.phash64(f) for f in (A, B, C, D, E)]
+    assert min(
+        bin((a ^ b) & (2**64 - 1)).count("1")
+        for i, a in enumerate(hashes)
+        for b in hashes[i + 1:]
+    ) >= 8
     clips = [
         (1, bytearray(multimodal.encode_bmps([A, B, C]))),
         (2, bytearray(multimodal.encode_bmps([A, B, D]))),
@@ -5878,10 +5879,11 @@ def test_t_closeness_audit_exact_tvds(spark):
     docs = spark.createDataFrame(
         rows, "lang string, source string, n_chars long"
     )
-    out = {
-        round(r["t"], 2): r
-        for r in D.t_closeness_audit(docs, checkpoint=False).collect()
-    }
+    from etl_pipeline2_0_spark.operators.partitioning import no_reuse
+
+    with no_reuse():
+        audit = D.t_closeness_audit(docs)
+    out = {round(r["t"], 2): r for r in audit.collect()}
     assert set(out) == {0.1, 0.2, 0.3, 0.5}
     for r in out.values():
         assert r["n_classes"] == 2

@@ -9,17 +9,34 @@ string-formatted timestamps, pre-rounded floats).
 
 from __future__ import annotations
 
+import contextlib
 import math
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from etl_pipeline2_0_spark.operators.partitioning import no_reuse
 from etl_pipeline2_0_spark.plans.registry import ALL_QUERIES
 from etl_pipeline2_0_spark.sources.tables import TABLES
 
 SQL_QUERIES = sorted(name for name, (_, sql) in ALL_QUERIES.items() if sql)
 ROWS_ONLY_QUERIES = sorted(name for name, (_, sql) in ALL_QUERIES.items() if not sql)
+# Oracled queries built through the functions whose ``reuse`` barriers
+# plan tests lift: each must give the oracle's answer with every barrier
+# lifted, so no result depends on where the barriers sit.
+NO_REUSE_QUERIES = [
+    "ann_hubness", "bitext_mine", "bitext_recall", "bm25_rm3_topk",
+    "corpus_overlap", "cross_source_dedup_matrix", "decontam_report",
+    "dedup_canonical", "dedup_incremental", "dedup_keep_best",
+    "dedup_manifest", "dup_components", "embed_dim_stats",
+    "jaccard_histogram", "label_noise_matrix", "lsh_geometry_sweep",
+    "minhash_decontam", "minhash_est_error", "minhash_pairs_portable",
+    "minhash_precision", "minhash_recall", "multimodal_neardup_recall",
+    "ngram_jaccard", "pack_waste_curve", "priority_sample_curve",
+    "quality_length_bias", "retrieval_ndcg_rm3", "rm3_expansion",
+    "simhash_recall", "soft_dedup", "t_closeness_audit", "winnow_recall",
+]
 
 
 @pytest.fixture(scope="module")
@@ -65,10 +82,16 @@ def _canon(df_pandas):
     return cols, sorted(rows, key=repr)
 
 
-@pytest.mark.parametrize("name", SQL_QUERIES)
-def test_query_matches_oracle(spark, sf_dir, duck, name):
+@pytest.mark.parametrize(
+    "name, barriers",
+    [pytest.param(n, True, id=n) for n in SQL_QUERIES]
+    + [pytest.param(n, False, id=f"{n}-no_reuse") for n in NO_REUSE_QUERIES],
+)
+def test_query_matches_oracle(spark, sf_dir, duck, name, barriers):
     fn, sql = ALL_QUERIES[name]
-    spark_pd = fn(spark, sf_dir).toPandas()
+    with contextlib.nullcontext() if barriers else no_reuse():
+        df = fn(spark, sf_dir)
+    spark_pd = df.toPandas()
     oracle_pd = duck.sql(sql).fetchdf()
     assert len(spark_pd) == len(oracle_pd), (
         f"{name}: row count {len(spark_pd)} != oracle {len(oracle_pd)}"
@@ -181,6 +204,56 @@ def test_rows_only_query_matches_golden(spark, sf_dir, name):
         assert len(pdf) > 0
         return
     check_rows_only_golden(pdf, golden_path, name)
+
+
+# OpenBLAS kernels, with the cpuinfo flag a CPU needs to run each.
+_BLAS_KERNELS = {"Sandybridge": "avx", "Haswell": "avx2", "SkylakeX": "avx512f"}
+
+
+def test_phash_goldens_do_not_depend_on_blas_kernel(spark, sf_dir, tmp_path):
+    # The image/video pHash rows are value-pinned, so the hashes must be a
+    # function of the pixels alone.  Their DCT runs through BLAS, whose
+    # kernels round differently; hash the same payloads in subprocesses
+    # pinned to each kernel and require identical results.
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    from etl_pipeline2_0_spark.functions import multimodal
+    from etl_pipeline2_0_spark.plans import llm_multimodal as LMM
+
+    with open("/proc/cpuinfo") as f:
+        flags = set(f.read().split())
+    kernels = [k for k, flag in _BLAS_KERNELS.items() if flag in flags]
+    if len(kernels) < 2:
+        pytest.skip(f"this CPU runs only {kernels} of the OpenBLAS kernels")
+    images = LMM._synth_bmp_media(spark, sf_dir, modulo=2)
+    frames = multimodal.sample_frames(
+        LMM._synth_bmps_media(spark, sf_dir), every_nth=1
+    )
+    payloads = [bytes(r.payload) for r in images.collect()]
+    payloads += [bytes(r.frame_payload) for r in frames.collect()]
+    path = tmp_path / "payloads.pkl"
+    path.write_bytes(pickle.dumps(payloads))
+    script = (
+        "import pickle, sys\n"
+        "from etl_pipeline2_0_spark.functions.multimodal import phash64\n"
+        "payloads = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "print([phash64(b) for b in payloads])\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    hashes = {}
+    for kernel in kernels:
+        env = dict(os.environ, OPENBLAS_CORETYPE=kernel, PYTHONPATH=root)
+        hashes[kernel] = subprocess.run(
+            [sys.executable, "-c", script, str(path)],
+            env=env, capture_output=True, text=True, check=True,
+        ).stdout
+    assert len(payloads) > 100
+    assert len(set(hashes.values())) == 1, {
+        k: v[:200] for k, v in hashes.items()
+    }
 
 
 def test_hash_golden_has_teeth(tmp_path):

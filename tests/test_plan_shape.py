@@ -17,6 +17,7 @@ pytestmark = pytest.mark.slow
 
 from pyspark.sql import functions as F
 
+from etl_pipeline2_0_spark.operators.partitioning import no_reuse
 from etl_pipeline2_0_spark.plans import llm_ops as L
 from etl_pipeline2_0_spark.plans import relational as R
 
@@ -29,6 +30,12 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _after(plan: str, marker: str) -> str:
+    """The plan text after the first ``marker``, which must be present."""
+    assert marker in plan, f"{marker!r} not in plan:\n{plan}"
+    return plan.split(marker, 1)[1]
+
+
 def test_q1_filter_pushed_to_scan(spark, sf_dir):
     df = R.q1_pricing_summary(spark, sf_dir)
     plan = _plan(df)
@@ -36,13 +43,13 @@ def test_q1_filter_pushed_to_scan(spark, sf_dir):
     # the inferred `IsNotNull(l_shipdate)` prefix — it was an artifact
     # of constraint propagation, which the session now disables; the
     # user predicate's pushdown is the contract.)
-    assert "LessThanOrEqual(l_shipdate" in plan.split("PushedFilters: [")[1]
+    assert "LessThanOrEqual(l_shipdate" in _after(plan, "PushedFilters: [")
 
 
 def test_q1_column_pruning(spark, sf_dir):
     plan = _plan(R.q1_pricing_summary(spark, sf_dir))
     # Only the 7 needed columns read, not l_orderkey/l_partkey/etc.
-    assert "l_orderkey" not in plan.split("ReadSchema")[1][:400]
+    assert "l_orderkey" not in _after(plan, "ReadSchema")[:400]
 
 
 def test_broadcast_joins_chosen(spark, sf_dir):
@@ -134,11 +141,11 @@ def test_q6_all_predicates_pushed(spark, sf_dir):
     from etl_pipeline2_0_spark.plans import tpch_more as T
 
     plan = _plan(T.q6_revenue_forecast(spark, sf_dir))
-    pushed = plan.split("PushedFilters")[1][:400]
+    pushed = _after(plan, "PushedFilters")[:400]
     for col in ("l_shipdate", "l_discount", "l_quantity"):
         assert col in pushed, f"{col} predicate not pushed:\n{pushed}"
     # Column pruning: only the 4 referenced columns in ReadSchema.
-    read = plan.split("ReadSchema")[1][:400]
+    read = _after(plan, "ReadSchema")[:400]
     assert "l_orderkey" not in read and "l_returnflag" not in read
 
 
@@ -204,21 +211,22 @@ def test_rp_lsh_topk_is_bucket_probe(spark, sf_dir):
 def test_dedup_incremental_is_cross_frame_equijoin(spark, sf_dir):
     # New-batch×corpus candidates must come from the shingle-hash equi-join
     # — never an all-pairs theta join — and the %5 batch split must be
-    # pushed into the parquet scans.  The default path checkpoints the
-    # shingle index (hiding the scans from the downstream plan), so the
-    # pushdown/join-shape assertions run on the checkpoint-free lineage;
-    # the default plan still proves no nested-loop survived the barrier.
+    # pushed into the parquet scans.  The default path puts the shingle
+    # index behind a barrier (hiding the scans from the downstream plan),
+    # so the pushdown/join-shape assertions run on the barrier-free
+    # lineage; the default plan still proves no nested-loop survived the
+    # barrier.
     from etl_pipeline2_0_spark.functions import dedup as D
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    full = D.jaccard_pairs_incremental(
-        docs.where(F.col("doc_id") % 5 == 0),
-        docs.where(F.col("doc_id") % 5 != 0),
-        k=3,
-        threshold=0.3,
-        checkpoint=False,
-    )
+    with no_reuse():
+        full = D.jaccard_pairs_incremental(
+            docs.where(F.col("doc_id") % 5 == 0),
+            docs.where(F.col("doc_id") % 5 != 0),
+            k=3,
+            threshold=0.3,
+        )
     plan = _plan(full)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -252,7 +260,7 @@ def test_corpus_filter_is_narrow_single_pass(spark, sf_dir):
     # no shuffle anywhere, and only (doc_id, text) read from parquet.
     plan = _plan(L.q_corpus_filter(spark, sf_dir))
     assert "Exchange" not in plan
-    read = plan.split("ReadSchema")[1][:200]
+    read = _after(plan, "ReadSchema")[:200]
     assert "text" in read and "lang" not in read and "source" not in read
 
 
@@ -476,7 +484,7 @@ def test_chunk_documents_is_narrow_no_shuffle(spark, sf_dir):
     plan = _plan(L.q_chunk_documents(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Sort" not in plan
-    read = plan.split("ReadSchema")[1][:200]
+    read = _after(plan, "ReadSchema")[:200]
     assert "text" in read and "lang" not in read and "source" not in read
 
 
@@ -866,18 +874,19 @@ def test_minhash_decontam_equijoin_and_broadcast_cap(spark, sf_dir):
     # Candidates come from a (band, bucket) EQUI-join between the two
     # corpora (never an all-pairs product); the hot-bucket cap applies
     # as a broadcast anti-join on both sides; verification re-shingles
-    # only candidate docs (two LeftSemi prunes).  checkpoint=False
-    # exposes the candidate subtree the production path hides behind
-    # its lazy barrier.
+    # only candidate docs (two LeftSemi prunes).  no_reuse() exposes
+    # the candidate subtree the production path hides behind its
+    # barrier.
     from etl_pipeline2_0_spark.functions import dedup as D
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    df = D.minhash_decontaminate(
-        docs.where(F.col("doc_id") % 2 == 0),
-        docs.where(F.col("doc_id") % 2 == 1),
-        num_hashes=16, bands=8, portable=True, checkpoint=False,
-    )
+    with no_reuse():
+        df = D.minhash_decontaminate(
+            docs.where(F.col("doc_id") % 2 == 0),
+            docs.where(F.col("doc_id") % 2 == 1),
+            num_hashes=16, bands=8, portable=True,
+        )
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -936,16 +945,17 @@ def test_bitext_exact_mode_blocked_cogroup_not_bnlj(spark, sf_dir):
     # one numpy matmul per block, both sides shuffled by the SAME
     # equi-key the ShuffledHashJoin used) — never a
     # BroadcastNestedLoopJoin or a real CartesianProduct.
-    # checkpoint=False exposes the pair subtree the production path
-    # hides behind its lazy barrier.
+    # no_reuse() exposes the pair subtree the production path hides
+    # behind its barrier.
     from etl_pipeline2_0_spark.functions import similarity
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    df = similarity.bitext_mine(
-        emb.where(F.col("label") < 5), emb.where(F.col("label") >= 5),
-        k=4, margin_threshold=1.0, method="exact", checkpoint=False,
-    )
+    with no_reuse():
+        df = similarity.bitext_mine(
+            emb.where(F.col("label") < 5), emb.where(F.col("label") >= 5),
+            k=4, margin_threshold=1.0, method="exact",
+        )
     plan = _plan(df)
     assert "pmod(xxhash64" in plan           # salted-block keys present
     assert "FlatMapCoGroupsInPandas" in plan  # per-block matmul scorer
@@ -962,10 +972,11 @@ def test_bitext_ivf_mode_no_block_replication(spark, sf_dir):
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    df = similarity.bitext_mine(
-        emb.where(F.col("label") < 5), emb.where(F.col("label") >= 5),
-        k=4, margin_threshold=1.0, method="ivf", checkpoint=False,
-    )
+    with no_reuse():
+        df = similarity.bitext_mine(
+            emb.where(F.col("label") < 5), emb.where(F.col("label") >= 5),
+            k=4, margin_threshold=1.0, method="ivf",
+        )
     plan = _plan(df)
     assert "pmod(xxhash64" not in plan       # no block-replicated join
     assert "CartesianProduct" not in plan
@@ -1291,17 +1302,18 @@ def test_embed_dim_stats_one_pass_broadcast_total(spark, sf_dir):
     assert "Window" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row total cross
-    # The checkpoint truncates lineage, so the composed plan can't pin
-    # the upstream shape (advisor r14) — assert it on the UN-checkpointed
+    # The barrier truncates lineage, so the composed plan can't pin
+    # the upstream shape (advisor r14) — assert it on the barrier-free
     # frame: exactly one corpus scan feeding a map-side-combined per-dim
     # aggregate, still window-free.
     from etl_pipeline2_0_spark.functions import similarity
     from etl_pipeline2_0_spark.plans.llm_ops import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    raw = _plan(similarity.embed_dim_stats(emb, checkpoint=False))
-    # Without the checkpoint both consumers re-derive the corpus pass
-    # (which is WHY the checkpoint is load-bearing): 2 scans, each a
+    with no_reuse():
+        raw = _plan(similarity.embed_dim_stats(emb))
+    # Without the barrier both consumers re-derive the corpus pass
+    # (which is WHY the barrier is load-bearing): 2 scans, each a
     # map-side-combined per-dim aggregate, still window-free.
     assert 1 <= raw.count("Scan parquet") <= 2
     assert "partial_count" in raw or "partial_sum" in raw
@@ -1345,15 +1357,16 @@ def test_pack_waste_curve_shares_one_prefix_sum(spark, sf_dir):
     plan = _plan(L.q_pack_waste_curve(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("Scan parquet") == 0  # behind the lazy checkpoint
+    assert plan.count("Scan parquet") == 0  # behind the barrier
     assert "partial_count" in plan
-    # pre-checkpoint shape: the two-level prefix sum (bucketed windows +
+    # pre-barrier shape: the two-level prefix sum (bucketed windows +
     # broadcast offsets), one corpus scan
     from etl_pipeline2_0_spark.functions import mixing
     from etl_pipeline2_0_spark.plans.llm_ops import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    raw = _plan(mixing.pack_waste_curve(docs, budgets=(256,), checkpoint=False))
+    with no_reuse():
+        raw = _plan(mixing.pack_waste_curve(docs, budgets=(256,)))
     assert raw.count("Scan parquet") <= 2
     assert "windowspecdefinition" in raw  # the prefix windows
     assert "CartesianProduct" not in raw
@@ -1458,14 +1471,15 @@ def test_minhash_est_error_equi_joins_only(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "partial_count" in plan
-    # the lazy checkpoint hides the shingle branch in the composed plan
+    # the barrier hides the shingle branch in the composed plan
     # (embed_dim_stats lesson) — pin the hash-keyed join shape on the
-    # un-checkpointed frame
+    # barrier-free frame
     from etl_pipeline2_0_spark.functions import dedup
     from etl_pipeline2_0_spark.plans.llm_ops import load_table
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
-    raw = _plan(dedup.minhash_estimator_error(docs, checkpoint=False))
+    with no_reuse():
+        raw = _plan(dedup.minhash_estimator_error(docs))
     assert "xxhash64" in raw  # 8-byte shingle hashes ride the shuffle
     assert "CartesianProduct" not in raw
 
@@ -1580,11 +1594,12 @@ def test_cross_source_dedup_matrix_digest_shuffle(spark, sf_dir):
     )
     from etl_pipeline2_0_spark.sources.tables import load_table
 
-    # checkpoint=False so the pin sees the full upstream shape (the
-    # registry wrapper keeps the checkpoint; localCheckpoint prints as
-    # an opaque ExistingRDD scan — the r14 advisor class)
+    # no_reuse() so the pin sees the full upstream shape (the registry
+    # wrapper keeps the barrier, which prints as an opaque ExistingRDD
+    # scan — the r14 advisor class)
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(cross_source_dedup_matrix(docs, checkpoint=False))
+    with no_reuse():
+        plan = _plan(cross_source_dedup_matrix(docs))
     assert "CartesianProduct" not in plan
     assert "md5" in plan
     assert "partial_count" in plan or "partial_sum" in plan
@@ -1597,22 +1612,19 @@ def test_priority_sample_curve_two_passes_takeordered(spark, sf_dir):
     from etl_pipeline2_0_spark.functions import mixing, text
     from etl_pipeline2_0_spark.sources.tables import load_table
 
-    # checkpoint=False un-blinds the full shape (the default lazily
-    # checkpoints the bounded ranked frame so the scored pass runs
-    # once for its two consumers; checkpointed it prints as an opaque
-    # ExistingRDD scan — the r14 advisor class)
+    # no_reuse() un-blinds the full shape (the default puts the bounded
+    # ranked frame behind a barrier so the scored pass runs once for its
+    # two consumers; behind it the frame prints as an opaque ExistingRDD
+    # scan — the r14 advisor class)
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "n_words", F.size(text.tokens(F.col("text")))
     )
-    plan = _plan(
-        mixing.priority_sample_curve(
-            docs, weight_col="n_words", checkpoint=False
-        )
-    )
+    with no_reuse():
+        plan = _plan(mixing.priority_sample_curve(docs, weight_col="n_words"))
     assert "TakeOrderedAndProject" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-    # 2 scored consumers + 1 exact-total pass un-checkpointed; the
+    # 2 scored consumers + 1 exact-total pass without the barrier; the
     # default collapses the scored side to ONE materialized pass
     assert plan.count("Scan parquet") == 3
     assert "BroadcastNestedLoopJoin" in plan
@@ -1653,7 +1665,7 @@ def test_boilerplate_strip_broadcast_group_totals_no_window(spark, sf_dir):
 def test_rm3_feedback_tables_broadcast_no_cartesian(spark, sf_dir):
     # The feedback-doc set, per-query score sums, and expansion table
     # are all bounded (#queries x fb_k / fb_terms rows) and must join
-    # as BROADCAST sides; checkpoint=False un-blinds the full chain.
+    # as BROADCAST sides; no_reuse() un-blinds the full chain.
     # No cartesian anywhere; windows only on per-query bounded frames.
     from etl_pipeline2_0_spark.functions import retrieval as R
     from etl_pipeline2_0_spark.plans.llm_retrieval import _BM25_QUERIES
@@ -1662,15 +1674,12 @@ def test_rm3_feedback_tables_broadcast_no_cartesian(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 5 == 0
     )
-    plan = _plan(
-        R.bm25_rm3_topk(
-            docs, _BM25_QUERIES, fb_k=5, fb_terms=8, checkpoint=False
-        )
-    )
+    with no_reuse():
+        plan = _plan(R.bm25_rm3_topk(docs, _BM25_QUERIES, fb_k=5, fb_terms=8))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-    # un-checkpointed the chain re-reads the corpus per consumer; the
-    # checkpointed default (the registry query) collapses to 3 scans —
+    # without barriers the chain re-reads the corpus per consumer; the
+    # default (the registry query) collapses to 3 scans —
     # this pin just guards against a quadratic blowup of the shape
     assert plan.count("Scan parquet") <= 30
 
@@ -1722,21 +1731,22 @@ def test_temperature_mix_curve_one_pass_bounded_fanout(spark, sf_dir):
 def test_quality_length_bias_one_pass_no_join(spark, sf_dir):
     # ONE narrow corpus pass into a map-side-combined aggregate on the
     # bounded bucket key; only the 1-row total rejoins (broadcast
-    # cross).  No window, no corpus join.  checkpoint=False un-blinds
-    # the full shape (the registry default checkpoints the bounded
-    # aggregate so the total branch doesn't re-scan the corpus —
-    # checkpointed, the executed plan shows ONE parquet scan).
+    # cross).  No window, no corpus join.  no_reuse() un-blinds the
+    # full shape (the registry default puts the bounded aggregate behind
+    # a barrier so the total branch doesn't re-scan the corpus — with
+    # it, the executed plan shows ONE parquet scan).
     from etl_pipeline2_0_spark.functions import text as TX
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(TX.quality_length_bias(docs, checkpoint=False))
+    with no_reuse():
+        plan = _plan(TX.quality_length_bias(docs))
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("Scan parquet") <= 2
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row total cross
-    # the registry default: the bounded-agg checkpoint absorbs the one
+    # the registry default: the bounded-agg barrier absorbs the one
     # corpus scan (it prints inside the checkpoint, not the visible
     # plan), so the downstream plan reads ONLY the ExistingRDD — no
     # second corpus scan exists anywhere
@@ -1780,13 +1790,14 @@ def test_t_closeness_audit_one_scan_bounded_stages(spark, sf_dir):
     from etl_pipeline2_0_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(D.t_closeness_audit(docs, checkpoint=False))
+    with no_reuse():
+        plan = _plan(D.t_closeness_audit(docs))
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row global cross
     assert plan.count("Scan parquet") <= 2
-    # registry default: the lazily-checkpointed cell frame absorbs the
+    # registry default: the cell frame behind its barrier absorbs the
     # corpus scan — the visible plan reads ONLY the ExistingRDD
     plan2 = _plan(LDQ.q_t_closeness_audit(spark, sf_dir))
     assert plan2.count("Scan parquet") == 0

@@ -1,8 +1,8 @@
-"""Dump `.explain("formatted")` for named bench queries to plans/r17/.
+"""Dump `.explain("formatted")` for named bench queries to plans/<out_subdir>/.
 
 Usage:
-    python tools/explain_r17.py before q1 q2 ...   # -> plans/r17/<q>_before.txt
-    python tools/explain_r17.py after  q1 q2 ...   # -> plans/r17/<q>_after.txt
+    python tools/explain_plans.py <out_subdir> <tag> q1 q2 ...
+        # -> plans/<out_subdir>/<q>_<tag>.txt, e.g. tag before / after
 
 Also prints a one-line plan-shape summary (Exchange count, join kinds,
 Python-eval nodes) per query so before/after diffs are quick to read.
@@ -22,12 +22,13 @@ from etl_pipeline2_0_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_subdir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out_dir = os.path.join(root, "plans", out_subdir)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="explain-r17")
+    spark = get_spark(app_name="explain-plans")
     import bench
 
     for name in names:
