@@ -18,11 +18,13 @@ Scale notes:
 
 - ``unionByName(allowMissingColumns=True)`` is the exact Spark primitive for
   the reference's group-by-type-then-concat strategy; the null fill is free.
-- ``total_items`` is attached via a **broadcast cross join against a 1-row
-  aggregate**, never ``count(*) OVER ()`` — a global window collapses the
-  whole table into a single partition, which is exactly the anti-pattern
-  that dies at 100 TB.  The aggregate is a 2-stage partial count (map-side
-  combine), and the join broadcasts one row.
+- ``total_items`` is never ``count(*) OVER ()`` — a global window
+  collapses the whole table into a single partition, which is exactly the
+  anti-pattern that dies at 100 TB.  When the caller already counted the
+  rows (``run_batch``'s schema-report aggregate) the total is a literal;
+  otherwise it comes from a **broadcast cross join against a 1-row
+  aggregate** (a 2-stage partial count, re-run by every action over the
+  table).
 - Deliberately NOT reproduced: the reference's cross-file record-accumulation
   bug (etl_pipeline.py:26 list never cleared across runs — SURVEY.md §2.9);
   each ``normalize_union`` call is a pure function of its inputs.
@@ -46,18 +48,25 @@ def union_by_name(frames: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
-def with_total_items(df: DataFrame, per_document: bool = False) -> DataFrame:
-    """W1: broadcast the global row count onto every row.
+def with_total_items(
+    df: DataFrame, per_document: bool = False, total: int | None = None
+) -> DataFrame:
+    """W1: put the global row count on every row.
 
-    ``per_document=True`` scopes the count to each source document instead —
-    the semantics a multi-file batch wants at scale (a partitioned window,
-    shuffles by doc_id, no single-partition collapse).
+    A known ``total`` is attached as a literal; without one, a broadcast
+    1-row count is cross-joined, which each action over the result
+    recomputes.  ``per_document=True`` scopes the count to each source
+    document instead — the semantics a multi-file batch wants at scale (a
+    grouped count broadcast back by doc_id, no single-partition collapse);
+    it always counts, so ``total`` is not used there.
     """
     if per_document:
         counts = df.groupBy("doc_id").agg(F.count(F.lit(1)).alias("total_items"))
         return df.join(F.broadcast(counts), "doc_id", "left")
-    total = df.agg(F.count(F.lit(1)).alias("total_items"))
-    return df.crossJoin(F.broadcast(total))
+    if total is not None:
+        return df.withColumn("total_items", F.lit(total))
+    total_df = df.agg(F.count(F.lit(1)).alias("total_items"))
+    return df.crossJoin(F.broadcast(total_df))
 
 
 def kind_rank(col):
@@ -70,6 +79,7 @@ def normalize_union(
     unioned: DataFrame,
     per_document: bool = False,
     keep_provenance: bool = False,
+    total_items: int | None = None,
 ) -> DataFrame:
     """P1 → W1 → F9 → O1/P3: the reference's ``normalize`` stage over
     the union-by-name (U1, kind order html→json→text→media) of the
@@ -84,12 +94,19 @@ def normalize_union(
 
     Taking the union rather than the per-kind frames lets callers share
     ONE frame — the pre-drop union the schema report also reads
-    (``run_batch`` persists it so detect+extract runs once).  Dropping
-    the P1 artifact columns after the union-by-name equals dropping them
-    per kind: missing columns are null-filled either way.
+    (``run_batch`` materializes it with ``reuse`` so detect+extract runs
+    once).  Dropping the P1 artifact columns after the union-by-name
+    equals dropping them per kind: missing columns are null-filled either
+    way.
+
+    ``total_items`` is the union's row count when the caller has already
+    measured it (the schema report's aggregate); W1 then attaches it as a
+    literal instead of counting again on every action.
     """
     unioned = unioned.drop(*ARTIFACT_COLUMNS)  # P1
-    with_total = with_total_items(unioned, per_document=per_document)
+    with_total = with_total_items(
+        unioned, per_document=per_document, total=total_items
+    )
     # F9: total_items coerced to bigint, nulls → 0 (try_cast ≡ errors='coerce')
     with_total = with_total.withColumn(
         "total_items", F.coalesce(F.col("total_items").cast("bigint"), F.lit(0))

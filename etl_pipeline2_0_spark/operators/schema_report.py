@@ -9,7 +9,8 @@ a quirk we reproduce.
 
 Spark-first design: one aggregate pass over the pre-drop union —
 ``count(col)`` per column for ``present_in``, ``count(*) > count(col)`` for
-``nullable``; map-side partial aggregation, a single 1-row result collected.
+``nullable``, and a conditional count per kind for the run's per-type counts;
+map-side partial aggregation, a single 1-row result collected.
 
 Documented divergence (SURVEY.md §7 wrinkle 4 + §1.2): the reference records
 the multiset of Python runtime types per field (a field seen as both ``int``
@@ -28,6 +29,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_pipeline2_0_spark.operators.extract import KIND_ORDER
 
 _TYPE_NAMES: dict[type, str] = {
     T.StringType: "str",
@@ -55,17 +58,22 @@ def _python_type_name(dt: T.DataType) -> str:
 
 def infer_schema_report(
     pre_drop_union: DataFrame, exclude: tuple[str, ...] = ("doc_id", "ordinal")
-) -> dict[str, dict[str, Any]]:
-    """A4: per-field ``{'type': [...], 'nullable': bool, 'present_in': int}``.
+) -> tuple[dict[str, dict[str, Any]], dict[str, int]]:
+    """A4: per-field ``{'type': [...], 'nullable': bool, 'present_in': int}``,
+    plus the row count per kind (A2 ``items_by_type``).
 
     ``pre_drop_union`` is the union of the per-kind record frames *before*
     the P1 artifact drop, matching the reference's computation point.
     One aggregation job; the result is tiny (one row) and driver-safe.
+    ``items_by_type`` lists the kinds present, in ``KIND_ORDER``; its sum
+    is the table's row count.
     """
     fields = [f for f in pre_drop_union.schema.fields if f.name not in exclude]
     aggs = [F.count(F.lit(1)).alias("__total")]
     for f in fields:
         aggs.append(F.count(F.col(f"`{f.name}`")).alias(f"p__{f.name}"))
+    for k in KIND_ORDER:
+        aggs.append(F.count(F.when(F.col("type") == k, 1)).alias(f"k__{k}"))
     row = pre_drop_union.agg(*aggs).first()
     total = row["__total"]
     report: dict[str, dict[str, Any]] = {}
@@ -76,7 +84,8 @@ def infer_schema_report(
             "nullable": present < total,
             "present_in": present,
         }
-    return report
+    items_by_type = {k: row[f"k__{k}"] for k in KIND_ORDER if row[f"k__{k}"]}
+    return report, items_by_type
 
 
 def frontend_type_tags(df: DataFrame) -> dict[str, str]:

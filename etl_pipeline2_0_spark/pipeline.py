@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_pipeline2_0_spark.operators.detect import detect_blocks
 from etl_pipeline2_0_spark.operators.extract import KIND_ORDER, extract_records
-from etl_pipeline2_0_spark.operators.partitioning import ensure_min_parallelism
+from etl_pipeline2_0_spark.operators.partitioning import ensure_min_parallelism, reuse
 from etl_pipeline2_0_spark.operators.normalize import (
     normalize_union,
     sorted_output,
@@ -31,6 +31,20 @@ from etl_pipeline2_0_spark.sources.documents import (
     documents_from_strings,
     read_documents,
 )
+
+
+def _extracted_union(
+    spark: SparkSession,
+    docs: DataFrame,
+    infer_max_bodies: int | None,
+    target: int | None = None,
+) -> DataFrame:
+    """detect → extract over ``docs``: the pre-drop union (U1, kind order
+    html→json→text→media) of the per-kind record frames."""
+    docs = ensure_min_parallelism(docs, target=target)
+    detected = detect_blocks(docs)
+    per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
+    return union_by_name([per_kind[k] for k in KIND_ORDER])
 
 
 def transform_documents(
@@ -47,15 +61,16 @@ def transform_documents(
     ``with_report=False`` skips the A4 schema report — the report is an
     EAGER aggregation (one full pipeline execution), so query paths that
     only need the normalized table should opt out and keep the whole thing
-    one lazy DAG.
+    one lazy DAG.  With the report, W1 reuses its row total; without it,
+    W1 counts with a broadcast join.
     """
-    docs = ensure_min_parallelism(docs)
-    detected = detect_blocks(docs)
-    per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
-    pre_drop = union_by_name([per_kind[k] for k in KIND_ORDER])
-    report = infer_schema_report(pre_drop) if with_report else None
+    pre_drop = _extracted_union(spark, docs, infer_max_bodies)
+    report, total = None, None
+    if with_report:
+        report, items_by_type = infer_schema_report(pre_drop)
+        total = sum(items_by_type.values())
     normalized = normalize_union(
-        pre_drop, per_document=per_document, keep_provenance=True
+        pre_drop, per_document=per_document, keep_provenance=True, total_items=total
     )
     return normalized, report
 
@@ -71,11 +86,17 @@ def run_batch(
 ) -> dict[str, Any]:
     """Entry points 1 (CLI batch) and 4 (HTTP payload) of SURVEY.md §3.
 
-    Returns ``{"normalized": DataFrame, "schema": report, "metadata": ...}``;
-    writes the reference's output files when ``out_dir`` is given.
+    Returns ``{"normalized": DataFrame, "schema": report, "items_by_type":
+    {kind: rows}, "metadata": ...}``; writes the reference's output files
+    when ``out_dir`` is given.
+
+    ``normalized`` reads the extracted records from executor blocks that
+    the schema report's job filled, so the caller's own actions on it
+    (the API's collect) do not run detect+extract again.  The blocks stay
+    as long as the caller holds ``normalized``, and are reclaimed with it.
     """
     start = datetime.now(timezone.utc)
-    parallelism_cap = None
+    target = None
     if payloads is not None:
         docs = documents_from_strings(spark, payloads)
         # The document count is KNOWN here: widening a 2-payload API call to
@@ -83,52 +104,37 @@ def run_batch(
         # (pure scheduler overhead on the latency-sensitive HTTP path).  One
         # document cannot be split below one row anyway, so cap at the
         # payload count.
-        parallelism_cap = max(1, len(payloads))
+        target = min(max(1, len(payloads)), spark.sparkContext.defaultParallelism)
     elif input_path is not None:
         docs = read_documents(spark, input_path)
     else:
         raise ValueError("one of input_path / payloads is required")
 
-    # Multi-action run (schema report + per-type counts + N sinks): persist
-    # the ONE shared frame — the pre-drop union — so detect+extract executes
-    # once, not once per action.  MEMORY_AND_DISK: extracted records are far
-    # smaller than raw input, but spillable if not.
-    from pyspark import StorageLevel
-
-    if parallelism_cap is not None:
-        target = min(parallelism_cap, spark.sparkContext.defaultParallelism)
-        docs = ensure_min_parallelism(docs, target=target)
-    else:
-        docs = ensure_min_parallelism(docs)
-    detected = detect_blocks(docs)
-    per_kind = extract_records(spark, detected, infer_max_bodies=infer_max_bodies)
-    pre_drop = union_by_name([per_kind[k] for k in KIND_ORDER]).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # Several actions read the union: the schema report (which also yields
+    # the per-type and total row counts), then every sink or the caller's
+    # collect.  ``reuse`` lets the report's job materialize it once, so
+    # detect+extract runs once per run, not once per action.
+    pre_drop = reuse(_extracted_union(spark, docs, infer_max_bodies, target=target))
+    report, items_by_type = infer_schema_report(pre_drop)
+    normalized = normalize_union(
+        pre_drop,
+        per_document=per_document,
+        keep_provenance=True,
+        total_items=sum(items_by_type.values()),
     )
-    try:
-        report = infer_schema_report(pre_drop)
-        normalized = normalize_union(
-            pre_drop, per_document=per_document, keep_provenance=True
+    result: dict[str, Any] = {
+        "normalized": normalized,
+        "schema": report,
+        "items_by_type": items_by_type,
+    }
+    if out_dir is not None:
+        result["metadata"] = load_outputs(
+            sorted_output(normalized),
+            report,
+            out_dir,
+            source_name=input_path or "<payload>",
+            items_by_type=items_by_type,
+            start_time=start,
+            use_rowstore=use_rowstore,
         )
-        items_by_type = {
-            r["type"]: r["count"]
-            for r in normalized.groupBy("type").count().collect()
-        }
-        result: dict[str, Any] = {
-            "normalized": normalized,
-            "schema": report,
-            "items_by_type": items_by_type,
-        }
-        if out_dir is not None:
-            result["metadata"] = load_outputs(
-                sorted_output(normalized),
-                report,
-                out_dir,
-                source_name=input_path or "<payload>",
-                items_by_type=items_by_type,
-                start_time=start,
-                use_rowstore=use_rowstore,
-            )
-        return result
-    finally:
-        pre_drop.unpersist()
+    return result

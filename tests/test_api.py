@@ -31,6 +31,37 @@ def test_payload_roundtrip(spark):
     assert "name" in out["schema"]
 
 
+def test_concurrent_requests_match_serial(spark):
+    # The threaded server runs requests concurrently on one session, and a
+    # request's extracted records stay materialized for as long as its
+    # table is held: no request may see another's frame, total or schema.
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    payloads = [
+        "\n".join(
+            [f'{{"k{i}_{j}": {j}, "shared": "p{i}"}}' for j in range(i + 1)]
+            + [f"plain text line {j} of payload number {i}" for j in range(2 * i + 1)]
+        )
+        for i in range(4)
+    ]
+    serial = [process_payload(spark, p) for p in payloads]
+    start = threading.Barrier(len(payloads))
+
+    def request(payload: str) -> dict:
+        start.wait(timeout=120)
+        return process_payload(spark, payload)
+
+    with ThreadPoolExecutor(max_workers=len(payloads)) as pool:
+        concurrent = list(pool.map(request, payloads))
+    assert len({len(out["data"]) for out in serial}) == len(payloads)
+    for want, got in zip(serial, concurrent):
+        assert got["success"] is True
+        assert got["data"] == want["data"]
+        assert got["types"] == want["types"]
+        assert got["schema"] == want["schema"]
+
+
 # ------------------------------------------------------------ HTTP server --
 
 

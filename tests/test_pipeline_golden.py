@@ -8,6 +8,7 @@ import os
 from etl_pipeline2_0_spark.operators.detect import detect_blocks
 from etl_pipeline2_0_spark.operators.extract import KIND_ORDER, extract_records
 from etl_pipeline2_0_spark.operators.normalize import sorted_output, union_by_name
+from etl_pipeline2_0_spark.operators.partitioning import no_reuse
 from etl_pipeline2_0_spark.operators.schema_report import (
     frontend_type_tags,
     infer_schema_report,
@@ -139,6 +140,9 @@ def test_sinks_roundtrip(spark, golden_doc, tmp_path):
         meta = json.load(f)
     assert meta["total_items"] == EXPECTED_ROWS
     assert meta["items_by_type"] == {"html": 3, "json": 9, "text": 15}
+    # Key order is the fixed kind order, not the order a shuffle returned
+    # the groups in (which follows the partition count, i.e. the host).
+    assert list(meta["items_by_type"]) == ["html", "json", "text"]
     # CSV: header + 27 rows in one part file.
     csv_df = spark.read.option("header", "true").csv(os.path.join(out, "cleaned_output"))
     assert csv_df.count() == EXPECTED_ROWS
@@ -147,6 +151,34 @@ def test_sinks_roundtrip(spark, golden_doc, tmp_path):
     assert store.count() == EXPECTED_ROWS
     blob = json.loads(store.first()["data_json"])
     assert "type" in blob and "source_index" in blob
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_run_batch_table_reads_the_materialized_union(spark, golden_doc):
+    # The schema report's job fills the extracted union's blocks; the
+    # returned table reads them (no detect regexes, no JSON parse left in
+    # its plan) and carries the measured row total as a literal instead of
+    # a cross-joined count.  Lifting the barrier changes only the plan.
+    for per_document in (False, True):
+        result = run_batch(spark, payloads=[golden_doc], per_document=per_document)
+        plan = _executed_plan(result["normalized"])
+        assert "from_json" not in plan
+        assert "regexp_extract_all" not in plan
+        if not per_document:
+            assert "NestedLoopJoin" not in plan
+            assert "CartesianProduct" not in plan
+        with no_reuse():
+            lifted = run_batch(spark, payloads=[golden_doc], per_document=per_document)
+        assert "from_json" in _executed_plan(lifted["normalized"])
+        assert (
+            sorted_output(lifted["normalized"]).collect()
+            == sorted_output(result["normalized"]).collect()
+        )
+        assert lifted["items_by_type"] == result["items_by_type"]
+        assert lifted["schema"] == result["schema"]
 
 
 def test_multi_document_batch(spark, golden_doc):

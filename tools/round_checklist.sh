@@ -6,6 +6,8 @@
 #   4. bench.py at the bench SF — per-query error isolation means a
 #      single broken query yields N-1 timings + an err field, not rc:1
 #      with zero evidence (the round-5 failure mode)
+#   plus the repository benchmark's output checks (perfbench, one short
+#   untraced run per workload)
 # Exit nonzero if any gate fails.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -44,6 +46,18 @@ echo "== gate 4.5/6: doc cites resolve =="
 # r16 verdict item 7: every file:line cite in SURVEY/README/SCALING must
 # resolve to a real file with enough lines (repo or reference side).
 python tools/check_cites.py || exit 1
+
+echo "== gate 4.6/6: repository benchmark output checks =="
+# One short untraced perfbench run per workload runs every output check
+# the benchmark has: the DuckDB oracle hashes of the mix queries, the batch
+# run against its corpus manifest, each request's table, and the
+# planted-wrong-answer self-test.  The last line must report correct with
+# no failed operation.
+for w in api_payload curation_mix; do
+  last=$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 | tail -n 1)
+  python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$last" \
+    || { echo "perfbench $w failed its checks: $last" >&2; exit 1; }
+done
 
 echo "== gate 5/6: bench at ${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} =="
 # Quiet-host discipline (r9 verdict item 5): BENCH_r09 was captured at
